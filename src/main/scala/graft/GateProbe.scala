@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * The corpus splits into `Batches` equal micro-batches by doc_id mod;
   * each loop drives the gate's factored batch body directly (the same
   * code path foreachBatch invokes), so the numbers price the gate, not
-  * MemoryStream plumbing.
+  * MemoryStream plumbing. Each line also prints the Spark jobs every
+  * batch body launched, counted by job group.
   */
 object GateProbe {
   def main(args: Array[String]): Unit = {
@@ -42,16 +43,22 @@ object GateProbe {
     def batch(i: Int) = crawl.filter(col("doc_id") % Batches === i)
     val perBatch = batch(0).count()
 
+    // per batch: wall and the Spark jobs the body launched (its job group)
     def loop(tag: String)(body: (org.apache.spark.sql.DataFrame, Long) => Unit)
         : Unit = {
-      val walls = (0 until Batches).map { i =>
+      val sc = spark.sparkContext
+      val (walls, jobs) = (0 until Batches).map { i =>
+        val group = s"gate-probe-$tag-$i"
+        sc.setJobGroup(group, tag)
         val t0 = System.nanoTime()
-        body(batch(i), i.toLong)
-        (System.nanoTime() - t0) / 1e9
-      }
+        try body(batch(i), i.toLong) finally sc.clearJobGroup()
+        ((System.nanoTime() - t0) / 1e9,
+          sc.statusTracker.getJobIdsForGroup(group).length)
+      }.unzip
       val w = walls.map(x => f"$x%.2f").mkString(" ")
       val rate = Batches / walls.sum
       println(f"$tag%-14s docs/batch=$perBatch walls=[$w] s  " +
+        f"jobs=[${jobs.mkString(" ")}]  " +
         f"batches/s=$rate%.2f  docs/s=${perBatch * rate}%.0f")
     }
 

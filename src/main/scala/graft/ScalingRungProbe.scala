@@ -55,6 +55,9 @@ object ScalingRungProbe {
     def docsScaled(times: Int): DataFrame = {
       val base = Tables.documents(spark, sfDir)
         .repartition(spark.sparkContext.defaultParallelism)
+      val maxId = base.agg(max("doc_id")).head().getLong(0)
+      require(maxId < 100000L, s"docsScaled: max doc_id $maxId is not " +
+        "below the 100,000 copy stride — shifted copies would collide")
       (0 until times).map { i =>
         if (i == 0) base
         else base

@@ -1282,23 +1282,30 @@ object Curation {
     }
   }
 
-  /** The STREAMING twin of [[crawlPipeline]] — the three existing gate
-    * loops composed into ONE topology: each micro-batch of crawl
-    * documents runs (1) the blocklist split ([[gateBlocklisted]]'s body —
-    * flagged docs land under `flaggedPath` with their verdict columns),
-    * (2) the substring-decontamination split against a FIXED benchmark
-    * span index ([[graft.ext.Dedup.gateSubstrDecontaminated]]'s body —
-    * quarantined docs land under `quarantinePath` with the audit
-    * columns), then (3) substring dedup against the GROWING corpus index
-    * ([[graft.ext.Dedup.maintainSubstrDedup]]'s body — survivors land
-    * under `survivorsPath` AND their spans append to the index delta, so
-    * later batches dedup against earlier survivors). With
+  /** The STREAMING twin of [[crawlPipeline]] — the three gate loops'
+    * semantics in ONE topology: each micro-batch of crawl documents splits
+    * into (1) FLAGGED docs under `flaggedPath`, the [[gateBlocklisted]]
+    * verdict with its columns; (2) QUARANTINED docs under
+    * `quarantinePath`, the unflagged docs that share a run with the FIXED
+    * benchmark span index, with the [[graft.ext.Dedup.gateSubstrDecontaminated]]
+    * audit columns; (3) SURVIVORS under `survivorsPath`, the rest minus
+    * the docs that substring-dedup against the GROWING corpus index
+    * ([[graft.ext.Dedup.maintainSubstrDedup]]'s verdict), whose spans
+    * also append to the index delta so later batches dedup against
+    * earlier survivors. Each stage sees only the previous stage's
+    * survivors, exactly as the gates chained by hand would. With
     * `autoCompactAt > 0` the dedup index self-compacts at the threshold
     * cadence, exactly like the standalone loop.
     *
-    * Replay-idempotent end to end: every stage's output overwrites its
-    * own `batch_id=` partition, stage verdicts recompute
-    * deterministically, and the dedup stage runs through the shared
+    * Per-trigger cost is the floor of a micro-batch engine, so a batch is
+    * not three gate bodies in a row: it tokenizes once and materializes
+    * two frames, the capped span table and one per-doc verdict frame
+    * ([[processCrawlIngest]]). At local[4] on 400-doc batches that cut a
+    * plain batch from 34–37 Spark jobs to 23–25 (SCALE.md).
+    *
+    * Replay-idempotent end to end: every output overwrites its own
+    * `batch_id=` partition, verdicts recompute deterministically, and the
+    * dedup stage runs through the shared
     * [[graft.sources.IndexLifecycle.dedupBatchStep]] skeleton (own-batch
     * delta exclusion + current-batch corpus-side verdict guard), so a
     * redelivered batch reproduces its first delivery bit for bit.
@@ -1321,10 +1328,28 @@ object Curation {
       })
 
   /** One micro-batch of [[maintainCrawlIngest]], factored out so the
-    * chained split and replay semantics are directly testable — the
-    * stage bodies are the gates' own (verdict shapes, checkpoint
-    * hygiene, partition-overwrite writes), sequenced so each stage only
-    * sees the previous stage's survivors.
+    * fused body is directly testable against its oracle — the three gate
+    * bodies ([[processBlocklistGate]], [[Dedup.processDecontGate]],
+    * [[Dedup.processSubstrBatch]]) chained by hand, each on the previous
+    * one's clean output (ExtSpec pins rows and column order equal).
+    *
+    * The batch tokenizes ONCE and checkpoints two frames:
+    *  1. its capped span table, partitioned on `h` at the dedup index's
+    *     bucket count — the probe side of BOTH index joins and the source
+    *     of the survivors' delta increment;
+    *  2. one per-doc verdict frame, batch ⋈ blocklist verdict ⟕
+    *     decontamination verdict — flagged, quarantined and the stage-2
+    *     survivors are plain filters over it.
+    * The decontamination verdict runs over ALL batch spans, blocked docs'
+    * included, and is still exactly the chained one for every unblocked
+    * doc: the position cap is per (anchor, doc), the islands per (doc,
+    * bench doc, diagonal) and the verdict per doc, so no doc's verdict
+    * reads another doc's spans. The dedup probe likewise runs over every
+    * batch span; pairs whose new side was dropped upstream name no
+    * stage-2 survivor, and the survivors anti-join ignores them. The dedup
+    * stage goes through [[graft.sources.IndexLifecycle.dedupBatchStep]]
+    * with the stage-2 survivors as its batch, so the replay guard stays
+    * keyed on the docs that can reach the index.
     */
   private[graft] def processCrawlIngest(batch: DataFrame, batchId: Long,
                                         blocked: DataFrame,
@@ -1337,24 +1362,36 @@ object Curation {
     val session = batch.sparkSession
     val b = graft.sources.Bucketing
     val ck = Checkpoints
-    val (verdicts, vIds) = ck.checkpointTracked(
-      domainBlocklist(batch, blocked))
+    // both indexes resolve ONCE: the probes read the generation whose
+    // bucket count shaped the span exchange
+    val benchPhys = b.resolvePhysical(session, benchTable)
+    val dedupPhys = b.resolvePhysical(session, dedupTable)
+    val (spans, sIds) = ck.checkpointTracked(Dedup.cappedBatchSpans(batch, n,
+      maxDocPositions, b.inheritedBucketCount(session, dedupPhys)))
     try {
-      b.writeDeltaPartition(
-        batch.join(verdicts.filter(!col("keep")), Seq("doc_id"), "inner"),
-        flaggedPath, batchId)
-      val s1 = batch.join(verdicts.filter(col("keep")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      val (dec, decIds) = ck.checkpointTracked(
-        Dedup.decontAgainstIndexSpans(session, Dedup.spanTable(s1, n),
-          benchTable, n, maxDocPositions))
+      val bl = domainBlocklist(batch, blocked)
+      // exchange-free when the bench index has the dedup index's bucket
+      // count; otherwise the planner re-shuffles one side
+      val dec = Dedup.decontOfCapped(spans, session.table(benchPhys), n)
+      val (verdicts, vIds) = ck.checkpointTracked(batch
+        .join(bl, Seq("doc_id"))
+        .join(dec, Seq("doc_id"), "left"))
       try {
+        def verdictCols(v: DataFrame) = v.columns.toSeq.filter(_ != "doc_id")
+        def rows(where: Column, cols: Seq[String]) =
+          verdicts.filter(where).select(cols.map(col): _*)
+        val batchCols = batch.columns.toSeq
+        // a decontamination verdict row always carries its longest run,
+        // so a null one is a doc with no verdict
+        val contam = col(verdictCols(dec).head).isNotNull
+        b.writeDeltaPartition(rows(!col("keep"), batchCols ++ verdictCols(bl)),
+          flaggedPath, batchId)
         b.writeDeltaPartition(
-          s1.join(dec, Seq("doc_id"), "inner"), quarantinePath, batchId)
-        val s2 = s1.join(dec.select("doc_id"), Seq("doc_id"), "left_anti")
-        Dedup.processSubstrBatch(s2, batchId, dedupTable, deltaDir,
-          survivorsPath, n, maxDocPositions)
-      } finally ck.releaseTracked(dec, decIds)
-    } finally ck.releaseTracked(verdicts, vIds)
+          rows(col("keep") && contam, batchCols ++ verdictCols(dec)),
+          quarantinePath, batchId)
+        Dedup.substrDedupStep(rows(col("keep") && !contam, batchCols),
+          batchId, spans, dedupPhys, deltaDir, survivorsPath)
+      } finally ck.releaseTracked(verdicts, vIds)
+    } finally ck.releaseTracked(spans, sIds)
   }
 }

@@ -1908,8 +1908,8 @@ object Dedup {
     * islands → per-train-doc verdicts. Train doc = doc_a (runs read in
     * TRAIN coordinates), bench = doc_b.
     */
-  private def decontOfCapped(okT: DataFrame, okB: DataFrame,
-                             n: Int): DataFrame = {
+  private[graft] def decontOfCapped(okT: DataFrame, okB: DataFrame,
+                                    n: Int): DataFrame = {
     val pairs = okT
       .select(col("h"), col("doc_id").as("doc_a"), col("pos").as("pa"))
       .join(okB.select(col("h"), col("doc_id").as("doc_b"),
@@ -2173,25 +2173,47 @@ object Dedup {
     // resolve the generation ONCE (bucket count + base read off it — the
     // single-resolution discipline under a concurrently folding index)
     val phys = b.resolvePhysical(session, table)
-    val buckets = b.inheritedBucketCount(session, phys)
-    val (basePart, deltaPart) = b.layerParts(session, phys,
+    // batch spans consumed twice (probe + survivor-span append)
+    val (bs, bsIds) = Checkpoints.checkpointTracked(cappedBatchSpans(batch, n,
+      maxDocPositions, b.inheritedBucketCount(session, phys)))
+    try substrDedupStep(batch, batchId, bs, phys, deltaDir, survivorsPath)
+    finally Checkpoints.releaseTracked(bs, bsIds)
+  }
+
+  /** A batch's position-capped [[spanTable]], hash-partitioned on `h` at
+    * `buckets` — an index's bucket count, so the one exchange serves the
+    * cap window (subset rule) AND co-partitions the probe against that
+    * index's bucketed scan.
+    */
+  private[graft] def cappedBatchSpans(batch: DataFrame, n: Int,
+                                      maxDocPositions: Int,
+                                      buckets: Int): DataFrame =
+    posCapped(spanTable(batch, n).repartition(buckets, col("h")),
+      maxDocPositions)
+
+  /** The dedup half of [[processSubstrBatch]] over materialized
+    * [[cappedBatchSpans]] and a resolved physical generation `phys`.
+    * `spans` may carry docs outside `batch` (the crawl body probes all of
+    * its batch's spans): their pairs name no `batch` doc on the new side,
+    * and only `batch` docs can survive or reach the delta.
+    */
+  private[graft] def substrDedupStep(batch: DataFrame, batchId: Long,
+                                     spans: DataFrame, phys: String,
+                                     deltaDir: String,
+                                     survivorsPath: String): Unit = {
+    val b = graft.sources.Bucketing
+    val (basePart, deltaPart) = b.layerParts(batch.sparkSession, phys,
       Some(s"$deltaDir/spans"), Seq("doc_id", "pos", "h"),
       excludeBatch = Some(batchId))
-    // batch spans consumed twice (probe + survivor-span append)
-    val (bs, bsIds) = Checkpoints.checkpointTracked(
-      posCapped(spanTable(batch, n).repartition(buckets, col("h")),
-        maxDocPositions))
-    try {
-      // base joined SEPARATELY from the delta so the bucketed base reads
-      // co-located (the split-parts discipline all the families share)
-      graft.sources.IndexLifecycle.dedupBatchStep(batch, batchId,
-        survivorsPath,
-        probePairs = substrCandidates(basePart, deltaPart)(
-          bs.select(col("h"), col("doc_id").as("doc_id_new"))),
-        appendIndex = survivors => b.writeDeltaPartition(
-          bs.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
-          s"$deltaDir/spans", batchId))
-    } finally Checkpoints.releaseTracked(bs, bsIds)
+    // base joined SEPARATELY from the delta so the bucketed base reads
+    // co-located (the split-parts discipline all the families share)
+    graft.sources.IndexLifecycle.dedupBatchStep(batch, batchId,
+      survivorsPath,
+      probePairs = substrCandidates(basePart, deltaPart)(
+        spans.select(col("h"), col("doc_id").as("doc_id_new"))),
+      appendIndex = survivors => b.writeDeltaPartition(
+        spans.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
+        s"$deltaDir/spans", batchId))
   }
 
   /** Generation-swap compaction of the streaming span index: the delta

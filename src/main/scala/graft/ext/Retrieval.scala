@@ -617,13 +617,16 @@ object Retrieval {
       // [[bm25Queries]] and [[phraseQueries]] take is exactly the rows
       // with pos in [QueryTokFrom-1, QueryTokFrom+QueryTokLen-2], and the
       // phrase idx re-bases as pos - (QueryTokFrom-1). The planted
-      // variants (doc_id = carve + 1e6) never leak into the carve —
-      // 1e6 % 97 = 27 ≠ 0 — but the id floor is asserted explicitly so
-      // the derivation cannot silently drift if the perturbation offset
-      // ever changes.
+      // variants (doc_id = carve + 1e6) never reach the carve — 1e6 % 97
+      // = 27 ≠ 0 — so a carve row at or above 1e6 is an INPUT doc inside
+      // the variants' id space: the plan fails on it (raise_error, no
+      // extra action) instead of quietly carving around it.
       val carvePos = pos.filter(col("doc_id") % QueryEvery === 0 &&
-        col("doc_id") < 1000000L &&
-        col("pos").between(QueryTokFrom - 1, QueryTokFrom + QueryTokLen - 2))
+          col("pos").between(QueryTokFrom - 1, QueryTokFrom + QueryTokLen - 2))
+        .withColumn("doc_id", when(col("doc_id") < 1000000L, col("doc_id"))
+          .otherwise(raise_error(concat(lit("retrievalEval: doc_id "),
+            col("doc_id").cast("string"),
+            lit(" >= 1000000 collides with the perturbed-copy id space")))))
       val queries = carvePos
         .select(col("doc_id").as("query_id"), col("token")).distinct()
       val phraseQ = carvePos.select(col("doc_id").as("query_id"),
@@ -764,9 +767,14 @@ object Retrieval {
       s"${phys}_stats"
     else s"${table}_stats"
 
-  private def readDelta(spark: SparkSession, path: String,
-                        cols: Seq[String]): Option[DataFrame] =
-    graft.sources.Bucketing.readParquetIfExists(spark, path, cols)
+  /** A BM25 delta layer's `cols` (typed as its `base` layer types them)
+    * plus `batch_id`.
+    */
+  private def readDelta(spark: SparkSession, path: String, base: DataFrame,
+                        cols: Seq[String]): Option[DataFrame] = {
+    val b = graft.sources.Bucketing
+    b.readParquetIfExists(spark, path, b.deltaSchema(base, cols))
+  }
 
   /** [[searchBm25Index]] over base + delta — the read side of the LSM
     * posture: answers reflect every compacted batch plus every
@@ -807,14 +815,17 @@ object Retrieval {
     val b = graft.sources.Bucketing
     val phys = b.resolvePhysical(spark, table)
     val folded = b.foldedBatchMaxOf(spark, phys)
-    def unfolded(path: String, cols: Seq[String]): Option[DataFrame] =
-      readDelta(spark, path, cols :+ "batch_id")
+    def unfolded(path: String, base: DataFrame,
+                 cols: Seq[String]): Option[DataFrame] =
+      readDelta(spark, path, base, cols)
         .map(_.filter(col("batch_id") > folded).drop("batch_id"))
     val base = spark.table(phys)
     val statsBase = spark.table(statsSiblingOf(spark, phys, table))
-    val stats = unfolded(s"$deltaDir/stats", Seq("n_docs", "total_tokens"))
+    val stats = unfolded(s"$deltaDir/stats", statsBase,
+        Seq("n_docs", "total_tokens"))
       .map(statsBase.unionByName(_)).getOrElse(statsBase)
-    unfolded(s"$deltaDir/postings", Seq("doc_id", "token", "tf", "dl")) match {
+    unfolded(s"$deltaDir/postings", base,
+        Seq("doc_id", "token", "tf", "dl")) match {
       case None =>
         bm25Rank(withBm25Weights(base, stats, maxDfPpm), queries, k)
       case Some(dp) =>
@@ -963,10 +974,11 @@ object Retrieval {
     // other half below the watermark FOREVER once it lands (e.g. postings
     // folded without their n_docs/total_tokens row permanently
     // undercounting every later score). The skipped batch folds next cycle.
+    val statsBase = spark.table(statsSiblingOf(spark, srcPhys, table))
     val deltaPost = readDelta(spark, s"$deltaDir/postings",
-      Seq("doc_id", "token", "tf", "dl", "batch_id"))
-    val deltaStats = readDelta(spark, s"$deltaDir/stats",
-      Seq("n_docs", "total_tokens", "batch_id"))
+      spark.table(srcPhys), Seq("doc_id", "token", "tf", "dl"))
+    val deltaStats = readDelta(spark, s"$deltaDir/stats", statsBase,
+      Seq("n_docs", "total_tokens"))
     val maxes = Seq(deltaPost, deltaStats).map(_.map(b.maxBatchIdOf))
     val newFolded =
       if (maxes.forall(_.isDefined))
@@ -989,7 +1001,6 @@ object Retrieval {
     val postings = unfolded(deltaPost)
       .map(spark.table(srcPhys).unionByName(_))
       .getOrElse(spark.table(srcPhys))
-    val statsBase = spark.table(statsSiblingOf(spark, srcPhys, table))
     val stats = unfolded(deltaStats)
       .map(statsBase.unionByName(_)).getOrElse(statsBase)
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),

@@ -900,7 +900,8 @@ object Similarity {
     // maxBatchId listing could fold a batch the watermark misses, which
     // post-swap base ∪ delta readers would double-count.
     val delta = b.readParquetIfExists(spark, s"$deltaDir/postings",
-      Seq("cluster_id", "vec_id", "embedding", "batch_id"))
+      b.deltaSchema(spark.table(srcPhys),
+        Seq("cluster_id", "vec_id", "embedding")))
     val newFolded =
       math.max(prevFolded, delta.map(b.maxBatchIdOf).getOrElse(-1L))
     if (newFolded == prevFolded && delta.isDefined && cap == prevCap) {
@@ -1054,8 +1055,8 @@ object Similarity {
     // instant the new generation is visible — no double-counted vectors
     val folded = b.foldedBatchMaxOf(spark, phys)
     graft.sources.Bucketing
-      .readParquetIfExists(spark, s"$deltaDir/postings",
-        Seq("cluster_id", "shard", "m", "vec_id", "embedding", "batch_id"))
+      .readParquetIfExists(spark, s"$deltaDir/postings", b.deltaSchema(base,
+        Seq("cluster_id", "shard", "m", "vec_id", "embedding")))
       .map(_.filter(col("batch_id") > folded).drop("batch_id")) match {
       case None => ivfSearch(base, topK)
       case Some(dp) =>

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Bucketed-table layout for co-located joins — the 100 TB path for the
   * enrichment join (J1) when the user dimension outgrows broadcast range
@@ -65,17 +66,21 @@ object Bucketing {
 
   /** Read a parquet path if it exists AND holds data (a streaming delta
     * layer may not before its first batch, and an empty batch's write
-    * leaves only a `_SUCCESS` marker — a directory `spark.read.parquet`
-    * rejects as schema-less), projecting to `cols` — which drops any
-    * provenance partition column (e.g. the replay-idempotence `batch_id`).
-    * Shared by the index maintenance loops' base ∪ delta readers.
+    * leaves only a `_SUCCESS` marker), as `schema` — its columns, in its
+    * order; the provenance partition column (e.g. the replay-idempotence
+    * `batch_id`) is read only when `schema` names it. Shared by the index
+    * maintenance loops' base ∪ delta readers.
+    *
+    * The schema is GIVEN, never inferred: inference reads a file footer
+    * through a Spark job, one job per call on every batch of every
+    * maintenance loop, to learn types the reader already knows
+    * ([[deltaSchema]] types a layer's columns off its base table).
     *
     * A compaction running elsewhere can delete the delta between the
-    * existence check and the PLAN-TIME scan (listing + schema inference);
-    * that window reads as ABSENT (None — base-only answers, exactly what
-    * a completed compaction implies) rather than failing the search. Only
-    * missing-file/path errors take the fallback: genuine schema errors
-    * (e.g. a bad projection column) still surface. This guards analysis
+    * existence check and the PLAN-TIME file listing; that window reads as
+    * ABSENT (None — base-only answers, exactly what a completed
+    * compaction implies) rather than failing the search. Only
+    * missing-file/path errors take the fallback. This guards analysis
     * only — the returned frame is lazy, so files deleted MID-EXECUTION
     * would still fail the job; that is why the generation-swap layout
     * never deletes eagerly (folded partitions get one compaction cycle of
@@ -84,7 +89,7 @@ object Bucketing {
     * run-from-one-place caveat.
     */
   def readParquetIfExists(spark: SparkSession, path: String,
-                          cols: Seq[String]): Option[DataFrame] = {
+                          schema: StructType): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def hasData: Boolean = {
@@ -96,17 +101,29 @@ object Bucketing {
     }
     try {
       if (fs.exists(p) && hasData)
-        Some(spark.read.parquet(path)
-          .select(cols.map(org.apache.spark.sql.functions.col): _*))
+        Some(spark.read.schema(schema).parquet(path)
+          .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*))
       else None
     } catch {
       case _: java.io.FileNotFoundException => None
       case e: org.apache.spark.sql.AnalysisException
           if e.getErrorClass != null &&
-            (e.getErrorClass.contains("PATH_NOT_FOUND") ||
-              e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA")) => None
+            e.getErrorClass.contains("PATH_NOT_FOUND") => None
     }
   }
+
+  /** The `batch_id` partition column of every delta layer. Typed LONG: a
+    * foreachBatch id is a long, and partition-directory inference would
+    * have typed it INT.
+    */
+  private val BatchIdField: StructField = StructField("batch_id", LongType)
+
+  /** The read schema of an index layer's delta: `cols` typed as `base`
+    * (the layer's base table, whose rows the delta rows union with) types
+    * them, then [[BatchIdField]].
+    */
+  def deltaSchema(base: DataFrame, cols: Seq[String]): StructType =
+    StructType(cols.map(base.schema(_)) :+ BatchIdField)
 
   /** Delete a delta layer's directories after compaction has folded them
     * into the base table.
@@ -413,7 +430,7 @@ object Bucketing {
     * must not pair this with a second listing of the same directory.
     */
   def maxBatchId(spark: SparkSession, path: String): Long =
-    readParquetIfExists(spark, path, Seq("batch_id"))
+    readParquetIfExists(spark, path, StructType(Seq(BatchIdField)))
       .map(maxBatchIdOf).getOrElse(-1L)
 
   /** Generation-consistent base ∪ delta read of one index layer: resolve
@@ -462,7 +479,7 @@ object Bucketing {
     val base = spark.table(phys).select(cols.map(col): _*)
     val delta = deltaPath.flatMap { p =>
       val folded = foldedBatchMaxOf(spark, phys)
-      readParquetIfExists(spark, p, cols :+ "batch_id")
+      readParquetIfExists(spark, p, deltaSchema(base, cols))
         .map { d =>
           val live = d.filter(col("batch_id").cast("long") > folded)
           excludeBatch.map(bId =>
@@ -515,7 +532,8 @@ object Bucketing {
     val g = currentGeneration(spark, table) + 1
     val phys = generationName(table, g)
     val prevFolded = foldedBatchMaxOf(spark, srcPhys)
-    val delta = readParquetIfExists(spark, deltaPath, cols :+ "batch_id")
+    val delta = readParquetIfExists(spark, deltaPath,
+      deltaSchema(spark.table(srcPhys), cols))
     val newFolded =
       math.max(prevFolded, delta.map(maxBatchIdOf).getOrElse(-1L))
     if (newFolded == prevFolded) {

@@ -166,7 +166,10 @@ object IndexLifecycle {
     *     for matching itself or a within-batch twin (both-survive is the
     *     documented within-batch contract; on a first run such pairs
     *     cannot exist, so first-run semantics are unchanged);
-    *  2. the dup→survivor derivation (distinct ids, one anti-join);
+    *  2. the dup→survivor derivation: one anti-join, no distinct (an
+    *     anti-join is indifferent to repeated dup ids). The guard's
+    *     batch side is the batch's own doc ids — batch-sized, so it
+    *     broadcasts and the probe pairs never shuffle for it;
     *  3. the write ORDER — survivors land before the index increment, so
     *     a crash between the two writes leaves the index missing rows a
     *     replay re-derives, never survivor rows the index already
@@ -188,11 +191,11 @@ object IndexLifecycle {
                      probePairs: org.apache.spark.sql.DataFrame,
                      appendIndex: org.apache.spark.sql.DataFrame => Unit)
       : Unit = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{broadcast, col}
     val dupIds = probePairs
-      .join(batch.select(col("doc_id").as("doc_id_corpus")),
+      .join(broadcast(batch.select(col("doc_id").as("doc_id_corpus"))),
         Seq("doc_id_corpus"), "left_anti")
-      .select(col("doc_id_new").as("doc_id")).distinct()
+      .select(col("doc_id_new").as("doc_id"))
     val survivors = batch.join(dupIds, Seq("doc_id"), "left_anti").persist()
     try {
       Bucketing.writeDeltaPartition(survivors, survivorsPath, batchId)

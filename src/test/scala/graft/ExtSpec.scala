@@ -577,6 +577,99 @@ class ExtSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
+  test("crawl ingest batch equals the three gates chained by hand, folds and replays included") {
+    val dir = managedTempDir("graft_crawl_equiv")
+    val blocked = Seq("ads.example.net").toDF("domain")
+    val bench = "crawl_eq_bench"
+    // one dedup index per side: each side folds its own delta into it
+    val sides = Seq("fused", "chained")
+    def idx(side: String) = s"crawl_eq_dedup_$side"
+    def out(side: String, o: String) = s"$dir/$side/$o"
+    Dedup.buildSubstrBenchIndexGen(
+      Seq((60L, "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10")).toDF("doc_id", "text"),
+      bench, buckets = 2)
+    sides.foreach(s => Dedup.buildSubstrBenchIndexGen(
+      Seq((50L, "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10")).toDF("doc_id", "text"),
+      idx(s), buckets = 2))
+    def fused(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      Curation.processCrawlIngest(b, id, blocked, bench, idx("fused"),
+        out("fused", "delta"), out("fused", "flagged"),
+        out("fused", "quar"), out("fused", "surv"), Dedup.SpanN,
+        Dedup.SubstrPosCap)
+    // the oracle: each standalone gate body on the previous one's clean
+    // output, read back from its own batch partition
+    def chained(b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      def clean(p: String) = spark.read.parquet(p)
+        .filter(col("batch_id") === id).drop("batch_id")
+      Curation.processBlocklistGate(b, id, blocked,
+        out("chained", "clean1"), out("chained", "flagged"))
+      Dedup.processDecontGate(clean(out("chained", "clean1")), id, bench,
+        out("chained", "clean2"), out("chained", "quar"), Dedup.SpanN,
+        Dedup.SubstrPosCap)
+      Dedup.processSubstrBatch(clean(out("chained", "clean2")), id,
+        idx("chained"), out("chained", "delta"), out("chained", "surv"),
+        Dedup.SpanN, Dedup.SubstrPosCap)
+    }
+    // the launch shape: Spark jobs one fused batch body launches
+    def step(b: org.apache.spark.sql.DataFrame, id: Long): Int = {
+      val sc = spark.sparkContext
+      val group = s"crawl-ingest-$id-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "one crawl ingest batch")
+      try fused(b, id) finally sc.clearJobGroup()
+      chained(b, id)
+      // autoCompactAt = 1: every batch folds
+      sides.foreach(s => Dedup.compactSubstrIfNeeded(spark, idx(s),
+        out(s, "delta"), maxUnfolded = 0))
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    def same(when: String): Unit =
+      Seq("flagged", "quar", "surv", "delta/spans").foreach { o =>
+        val Seq(f, c) = sides.map(s => spark.read.parquet(out(s, o)))
+        assert(f.columns.toSeq == c.columns.toSeq, s"$o columns $when")
+        val Seq(fr, cr) = Seq(f, c).map(_.collect().map(_.toString).sorted.toSeq)
+        assert(fr == cr, s"$o rows $when")
+        assert(fr.nonEmpty, s"$o is empty $when")
+      }
+    try {
+      val b1 = Seq(
+        (301L, "novel words one https://cdn0.ads.example.net/t two three four five six seven", "a"),
+        (302L, "x q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 y", "a"),   // contaminated
+        // blocked AND contaminated: the first gate takes it
+        (303L, "k q1 q2 q3 q4 q5 q6 q7 q8 q9 k2 see https://ads.example.net/x page", "b"),
+        (304L, "pre s1 s2 s3 s4 s5 s6 s7 s8 s9 s10 post", "b"), // base near-dup
+        (305L, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10", "a"),
+        (306L, "t1 t2 t3 t4 t5 t6 t7 t8 t9 t10", "a"),        // within-batch
+        (307L, "z t1 t2 t3 t4 t5 t6 t7 t8 t9 t10", "b"),      // twins
+        (308L, "too short to span", "b")                      // < SpanN tokens
+      ).toDF("doc_id", "text", "src")
+      step(b1, 1L)
+      same("after batch 1")
+      val b2 = Seq(
+        (311L, "w0 u1 u2 u3 u4 u5 u6 u7 u8 u9 u10 w1", "a"),  // earlier survivor
+        (312L, "v1 v2 v3 v4 v5 v6 v7 v8 v9 v10", "b"),
+        (313L, "y q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 y2", "a"),
+        (314L, "ads https://cdn1.ads.example.net/t v1 v2 v3 v4 v5 v6 v7 v8", "b")
+      ).toDF("doc_id", "text", "src")
+      val jobs = step(b2, 2L)
+      same("after batch 2")
+      // launch shape of a plain batch over a live delta: two checkpoints
+      // (spans, verdicts), two filter writes, the dedup step. The staged
+      // body (three checkpoints, two tokenizations, an inferred delta
+      // schema) launched 32 jobs here
+      assert(jobs == 22, s"jobs per crawl ingest batch: $jobs")
+      step(b2, 2L) // replayed after its own fold
+      same("after the replay of batch 2")
+      assert(spark.read.parquet(out("fused", "surv")).select("doc_id")
+        .as[Long].collect().toSet == Set(305L, 306L, 307L, 308L, 312L))
+    } finally {
+      (bench +: sides.map(idx)).foreach { t =>
+        spark.sql(s"DROP VIEW IF EXISTS $t")
+        (1 to 4).foreach(graft.sources.Bucketing.dropGeneration(spark, t, _))
+      }
+    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   test("streaming blocklist gate: clean/flagged split, replay-idempotent") {
     val blocked = Seq("ads.example.net").toDF("domain")
     val dir = managedTempDir("graft_bl_gate")

@@ -353,6 +353,21 @@ class RetrievalSpec extends SparkSpec {
     assert(out("phrase")._2 == 2L, out.toString)
   }
 
+  test("retrieval eval: a carve doc inside the perturbed-copy id space fails the plan") {
+    // 1000070 = 97 × 10310: a carve id at or above the 1e6 variant offset
+    // used to drop out of the carve silently
+    val docs = Seq((194L, "u0 u1 t3 t4 t5 t6 tail"),
+        (1000070L, "v0 v1 v2 v3 v4 v5 v6"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    val e = intercept[Exception](Retrieval.retrievalEval(docs).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString
+    assert(msgs.contains("doc_id 1000070 >= 1000000"), msgs)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   test("phrase df ceiling: hot term becomes a don't-care position") {
     // phrase = tokens 3..6 of doc 0 = "a stopx b c"; stopx is in every doc
     val docs = Seq(
