@@ -506,9 +506,14 @@ object Dedup {
         array_join(expr("slice(__toks, size(__toks) div 2 + 1, size(__toks))"),
           " ").as("text"))
 
+  /** The three index-table suffixes of a Jaccard index, in build order. */
+  private val JacLayers = Seq("vocab", "toks", "prefix")
+
   /** Build the persisted prefix index for INCREMENTAL exact τ-Jaccard dedup
     * — [[jaccardJoin]]'s build-once/probe-many form, completing the exact
-    * half of the nightly-crawl story next to [[buildLshIndex]]. Three
+    * half of the nightly-crawl story next to [[buildLshIndexGen]] — as a
+    * numbered generation behind views, so [[compactJaccardIndexGen]] can
+    * fold the [[maintainJaccardDedup]] delta WHILE probes serve. Three
     * bucketed tables:
     *
     *  - `{name}_vocab` (token, tid): the FROZEN global prefix order
@@ -524,20 +529,8 @@ object Dedup {
     * The stored prefix length is cut at `tauPpm`; probing is lossless for
     * any probe τ ≥ build τ (higher τ needs shorter prefixes — a subset of
     * what is stored).
-    */
-  def buildJaccardIndex(documents: DataFrame, name: String,
-                        tauPpm: Long = 850000L, buckets: Int = 8): Unit =
-    buildJaccardTables(documents, s"${name}_vocab", s"${name}_toks",
-      s"${name}_prefix", tauPpm, buckets)
-
-  /** The three index-table suffixes of a Jaccard index, in build order. */
-  private val JacLayers = Seq("vocab", "toks", "prefix")
-
-  /** [[buildJaccardIndex]] in the generation-swap layout: each of the
-    * three physical tables lands as a numbered generation and the logical
-    * names become views, so [[compactJaccardIndexGen]] can fold the
-    * [[maintainJaccardDedup]] delta WHILE probes serve. Consistency has
-    * two layers:
+    *
+    * Consistency has two layers:
     *  - probes derive the toks/prefix physical tables from the VOCAB
     *    generation (see [[jaccardAgainstIndexTracked]]) and all three
     *    physical tables are written here BEFORE the vocab view swaps, so
@@ -556,13 +549,12 @@ object Dedup {
     * supersedes those partitions AND their rows carry the OLD tid
     * numbering — exposing them against the re-ranked vocab would corrupt
     * the probe's sorted tid arrays, not just double-count
-    * ([[sources.Bucketing.stampRebuildWatermark]]).
+    * ([[sources.IndexLifecycle.buildGeneration]]'s `deltaPaths`).
     */
   def buildJaccardIndexGen(documents: DataFrame, name: String,
                            tauPpm: Long = 850000L, buckets: Int = 8,
                            deltaDir: Option[String] = None): Unit = {
     val spark = documents.sparkSession
-    val b = graft.sources.Bucketing
     // the shared skeleton (sources.IndexLifecycle) owns the invariants
     // this family leans on hardest: ONE shared generation number across
     // the three layers (the probe's vocab-derived sibling lookup requires
@@ -575,9 +567,7 @@ object Dedup {
       write = phys =>
         buildJaccardTables(documents, phys(0), phys(1), phys(2), tauPpm,
           buckets),
-      stampWatermark = phys => deltaDir.foreach { d =>
-        b.stampRebuildWatermark(spark, phys, JacLayers.map(s => s"$d/$s"))
-      })
+      deltaPaths = deltaDir.toSeq.flatMap(d => JacLayers.map(s => s"$d/$s")))
   }
 
   private def buildJaccardTables(documents: DataFrame, vocabT: String,
@@ -652,7 +642,7 @@ object Dedup {
     s"slice(toks, 1, int(n - ((n * ${tauPpm}L + 999999L) div 1000000L) + 1L))")
 
   /** Exact τ-Jaccard pairs of NEW documents against a persisted
-    * [[buildJaccardIndex]] — (doc_new, doc_corpus, n_common, j_ppm), NO
+    * [[buildJaccardIndexGen]] — (doc_new, doc_corpus, n_common, j_ppm), NO
     * false negatives vs re-running [[jaccardJoin]] over the union corpus.
     *
     * Probe tokens UNSEEN in the index vocabulary rank BEFORE every known
@@ -807,86 +797,26 @@ object Dedup {
     (out, perIds)
   }
 
-  /** Append survivor documents to a [[buildJaccardIndex]]: tokens new to
-    * the vocabulary are assigned tids ABOVE the current max — appending at
-    * the END of the frozen order preserves every existing pairwise
-    * comparison, so all stored prefixes remain valid (no rebuild). The
-    * placement makes brand-new tokens rank as "most common" (prefix-last),
-    * which only weakens pruning, never correctness; a periodic rebuild
-    * restores true df order. The max-tid read is one O(1) driver scalar.
-    *
-    * REPLAY-IDEMPOTENT (foreachBatch redelivers a batch whose checkpoint
-    * commit failed): every append is gated on docs MISSING from
-    * `{name}_toks`, which is written LAST — a fully-committed batch
-    * re-appends nothing. The vocab append is idempotent by its own
-    * left-anti. Prefix rows are written BEFORE toks, so the one partial-
-    * failure window (crash between the two) re-appends prefix rows as
-    * DUPLICATES rather than losing them — duplicate prefix rows only
-    * produce duplicate candidates, which the probe's `distinct()` erases,
-    * while a missing prefix row would be a silent false negative. The
-    * missing-doc gate joins the batch's ids against the toks table
-    * co-located off its doc_id bucketing.
-    */
-  def appendToJaccardIndex(spark: org.apache.spark.sql.SparkSession,
-                           survivors: DataFrame, name: String,
-                           tauPpm: Long = 850000L, buckets: Int = 8): Unit = {
-    val (tk, tkIds) = Checkpoints.checkpointTracked(survivors
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalysis.tokens(col("text")))).as("token"))
-      .filter(col("token") =!= "")
-      .join(spark.table(s"${name}_toks").select("doc_id"), Seq("doc_id"), "left_anti"))
-    try {
-      // coalesce: an index built over an empty corpus has an empty vocab,
-      // and max() over zero rows is NULL — appends must still work (tids
-      // from 1)
-      val maxTid = spark.table(s"${name}_vocab")
-        .agg(coalesce(max(col("tid")), lit(0L))).head.getLong(0)
-      Ranks.globalRank(
-          tk.select("token").distinct()
-            .join(spark.table(s"${name}_vocab").select("token"), Seq("token"), "left_anti"),
-          "tid", col("token").asc)
-        .withColumn("tid", col("tid") + lit(maxTid))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "token").saveAsTable(s"${name}_vocab")
-      spark.catalog.refreshTable(s"${name}_vocab")
-      val (toks, toksIds) = Checkpoints.checkpointTracked(
-        tk.join(spark.table(s"${name}_vocab"), "token")
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(col("tid"))).as("toks"))
-          .withColumn("n", size(col("toks")).cast("long")))
-      try {
-        // tk is dead once toks materializes (the writes below read toks)
-        Checkpoints.releaseTracked(toks, tkIds)
-        toks.select(col("doc_id"), col("n"), posexplode(prefixSlice(tauPpm)))
-          .select(col("col").as("tid"), col("doc_id"), col("n"),
-            (col("pos") + 1).cast("long").as("rn"))
-          .write.mode("append").format("parquet")
-          .bucketBy(buckets, "tid").saveAsTable(s"${name}_prefix")
-        toks.write.mode("append").format("parquet")
-          .bucketBy(buckets, "doc_id").saveAsTable(s"${name}_toks")
-        spark.catalog.refreshTable(s"${name}_toks")
-        spark.catalog.refreshTable(s"${name}_prefix")
-      } finally Checkpoints.releaseTracked(toks, toksIds)
-    } finally Checkpoints.releaseTracked(tk, tkIds)
-  }
-
   /** One maintenance batch's increments to the Jaccard delta layer —
     * vocab extension, token arrays and prefixes for `survivors` — each
     * landing in its own `batch_id=` partition
     * ([[sources.Bucketing.writeDeltaPartition]]). Tokens new to the
     * visible vocabulary (base ∪ delta EXCLUDING this batch's own
-    * partition) are assigned tids ABOVE the visible max — the same
-    * append-at-end frozen-order argument as [[appendToJaccardIndex]], so
-    * every stored prefix remains valid with no rebuild.
+    * partition) are assigned tids ABOVE the visible max: appending at the
+    * END of the frozen order preserves every existing pairwise
+    * comparison, so every stored prefix remains valid with no rebuild.
+    * The placement makes brand-new tokens rank as "most common"
+    * (prefix-last), which only weakens pruning, never correctness; a
+    * periodic rebuild restores true df order.
     *
     * REPLAY-IDEMPOTENT by recomputation: excluding the batch's own
     * partition makes a redelivery see exactly the state the first
     * delivery saw, every derivation (rank order, tid arithmetic) is
     * deterministic, and the partition overwrite replaces the first
     * delivery's rows with identical ones — no missing-doc gates, no
-    * per-batch index scans, and none of the in-place form's
-    * partial-failure ordering subtleties (a crash between layer writes
-    * just re-overwrites all three on replay). The toks join reads the
+    * per-batch index scans, and no partial-failure ordering subtleties
+    * (a crash between layer writes just re-overwrites all three on
+    * replay). The toks join reads the
     * IN-MEMORY new-vocab frame rather than re-listing the directory just
     * written, so the batch's own exclusion filter cannot hide its own new
     * tids.
@@ -933,19 +863,16 @@ object Dedup {
     } finally Checkpoints.releaseTracked(tk, tkIds)
   }
 
-  /** Streaming exact-dedup loop over a persisted [[buildJaccardIndex]] /
-    * [[buildJaccardIndexGen]] — the provably-complete counterpart of
+  /** Streaming exact-dedup loop over a persisted [[buildJaccardIndexGen]]
+    * index — the provably-complete counterpart of
     * [[maintainLshDedup]]: each micro-batch probes base ∪ delta, docs with
     * ANY pair at τ are dropped, survivors are written AND their vocab/
     * toks/prefix increments land in the `batch_id=`-partitioned delta
     * layer under `deltaDir` ([[appendJaccardDelta]]) so later batches
     * dedup against earlier survivors. [[compactJaccardIndexGen]]
     * periodically folds the delta into new generations of the three
-    * bucketed tables — safe to run WHILE this loop and any probes serve
-    * (the old in-place table appends had a run-from-one-place caveat).
-    * Like the LSH loop, an UNBOUNDED run must build with
-    * [[buildJaccardIndexGen]]: plain tables serve but have no fold path,
-    * and `autoCompactAt` (> 0) makes this loop self-compacting exactly
+    * bucketed tables — safe to run WHILE this loop and any probes serve.
+    * `autoCompactAt` (> 0) makes this loop self-compacting exactly
     * like [[maintainLshDedup]]'s option (threshold-gated
     * [[compactJaccardIfNeeded]] after each batch, bucket count inherited
     * from the current generation; default 0 = off; a threshold of 1
@@ -958,8 +885,9 @@ object Dedup {
     *
     * Replay-safe: survivors land in a `batch_id=` partition via dynamic
     * partition OVERWRITE (a redelivered batch replaces its own partition,
-    * never double-appends), index appends are gated per table inside
-    * [[appendToJaccardIndex]], and pairs whose corpus side is a
+    * never double-appends), the index increment ([[appendJaccardDelta]])
+    * recomputes from the batch-excluded visible state and overwrites its
+    * own delta partitions, and pairs whose corpus side is a
     * CURRENT-batch doc are excluded from the dup verdict — on replay the
     * index already contains this batch's survivors, so a doc must not be
     * dropped for matching itself OR a within-batch twin that the first
@@ -1017,20 +945,13 @@ object Dedup {
     * build-is-a-job / probe-is-a-scan posture as
     * [[Similarity.buildIvfIndex]]. band_idx folds into the key so the join
     * has ONE equi-column — the bucketing satisfies it directly.
-    */
-  def buildLshIndex(documents: DataFrame, table: String, buckets: Int = 8): Unit =
-    graft.sources.Bucketing.writeBucketed(
-      lshBands(documents).select(
-        concat_ws(":", col("band_idx"), col("band_key")).as("bkey"), col("doc_id")),
-      table, "bkey", buckets)
-
-  /** [[buildLshIndex]] in the generation-swap layout (see
-    * sources.Bucketing): the physical band table lands as a numbered
-    * generation and `table` becomes a view, so [[compactLshIndexGen]] can
-    * fold the maintenance delta WHILE [[dedupAgainstIndex]]/
-    * [[dedupAgainstIndexWith]]/[[maintainLshDedup]] serve. The probe
-    * surface is unchanged — views resolve through `spark.table` exactly
-    * like tables, including the bucketed scan's exchange-free join side.
+    *
+    * The band table lands as a numbered generation and `table` becomes a
+    * view (see sources.Bucketing), so [[compactLshIndexGen]] can fold the
+    * maintenance delta WHILE [[dedupAgainstIndex]]/
+    * [[dedupAgainstIndexWith]]/[[maintainLshDedup]] serve — views resolve
+    * through `spark.table` exactly like tables, including the bucketed
+    * scan's exchange-free join side.
     */
   def buildLshIndexGen(documents: DataFrame, table: String,
                        buckets: Int = 8,
@@ -1050,8 +971,7 @@ object Dedup {
           concat_ws(":", col("band_idx"), col("band_key")).as("bkey"),
           col("doc_id")),
         phys.head, "bkey", buckets),
-      stampWatermark = phys => deltaDir.foreach(d =>
-        b.stampRebuildWatermark(spark, phys.head, Seq(s"$d/bands"))))
+      deltaPaths = deltaDir.map(d => s"$d/bands").toSeq)
   }
 
   /** Near-dup candidates of NEW documents against a persisted LSH index:
@@ -1158,7 +1078,7 @@ object Dedup {
       compactLshIndexGen(spark, table, deltaDir, _))
 
   /** Streaming incremental-dedup loop over a persisted LSH index
-    * ([[buildLshIndex]] or [[buildLshIndexGen]]): each micro-batch bands
+    * ([[buildLshIndexGen]]): each micro-batch bands
     * its documents, probes base ∪ delta, and splits — docs with ANY banded
     * match are duplicates and are dropped; survivors are written to
     * `survivorsPath` AND their bands land in the `batch_id=`-partitioned
@@ -1166,21 +1086,13 @@ object Dedup {
     * survivors too. [[compactLshIndexGen]] periodically folds the delta
     * into a new generation of the bucketed base — the same LSM posture as
     * [[Retrieval.maintainBm25Index]], and like it safe under a compaction
-    * running CONCURRENTLY with the loop (the old in-place table append had
-    * a run-from-one-place caveat; the delta write touches only this
+    * running CONCURRENTLY with the loop (the delta write touches only this
     * batch's own partition). This is the nightly-crawl loop as a stream:
     * the corpus side never recomputes its MinHash (paid at build/compact
     * time), each increment pays one banding pass plus the split probe's
     * two joins (bucketed base side exchange-free, delta side delta-sized
     * — see [[dedupAgainstIndexWith]]); compaction resets the delta side
     * to zero.
-    *
-    * Layout choice: the loop SERVES either layout (a plain table resolves
-    * with watermark −1), but only the generation-swap layout has a
-    * compaction path — the Gen compactors refuse plain tables and the
-    * in-place fold is retired — so an UNBOUNDED loop must build with
-    * [[buildLshIndexGen]]; a plain [[buildLshIndex]] suits bounded runs
-    * whose delta is dropped with the run.
     *
     * Within-batch near-dups that match nothing in the index BOTH survive —
     * run [[minhashCandidates]] on the increment upstream if intra-batch

@@ -310,20 +310,18 @@ object Fuzzy {
                          buckets: Int = 8,
                          deltaDir: Option[String] = None,
                          maxEdits: Int = 1): Unit = {
+    require(maxEdits >= 1, s"edit radius must be at least 1, got $maxEdits")
     val spark = documents.sparkSession
     val b = graft.sources.Bucketing
     // the shared skeleton (sources.IndexLifecycle) owns adoptable-check /
-    // serving-generation capture / shared numbering / swap order / retire;
-    // family-specific here: ONE shingle aggregation feeds BOTH layer
-    // writes (tokenize+shingle is the dominant build cost; an uncached
-    // plan would run it twice), and the RADIUS is stamped as a sibling of
-    // the not-yet-live keys generation via preSwap — the view repoint is
-    // then the single atomic step that changes both the postings a probe
-    // reads and the radius it reads them at (a crash before the swaps
-    // leaves an orphan generation plus its radius sibling, never
-    // observable; the former post-swap drop/recreate of a shared
-    // `{name}_radius` table had a window in which a live d2 index read
-    // back the default 1).
+    // serving-generation capture / shared numbering / manifests / swap
+    // order / retire; family-specific here: ONE shingle aggregation feeds
+    // BOTH layer writes (tokenize+shingle is the dominant build cost; an
+    // uncached plan would run it twice), and the RADIUS rides the keys
+    // generation's manifest — the view repoint is then the single atomic
+    // step that changes both the postings a probe reads and the radius it
+    // reads them at. Each layer reads its OWN watermark, so a rebuild
+    // stamps both.
     graft.sources.IndexLifecycle.buildGeneration(spark,
       Seq(name, s"${name}_cnt"),
       write = phys => {
@@ -340,55 +338,49 @@ object Fuzzy {
           b.writeBucketed(cnt, phys(1), "term", buckets)
         } finally Checkpoints.releaseTracked(cnt, cntIds)
       },
-      // each layer reads its OWN watermark: stamp both
-      stampWatermark = phys => deltaDir.foreach(d =>
-        b.stampRebuildWatermark(spark, phys, Seq(s"$d/keys", s"$d/cnt"))),
-      preSwap = phys => stampRadius(spark, phys.head, maxEdits))
-    // the per-generation sibling is live behind the swap now — retire the
-    // legacy shared `{name}_radius` stamp (pre-sibling builds wrote it):
-    // left in the catalog it would be silently read, at a stale radius,
-    // if a future generation ever lacked its sibling ([[indexRadius]]'s
-    // fallback order)
-    b.dropWithLocation(spark, s"${name}_radius")
+      deltaPaths = deltaDir.toSeq.flatMap(d => Seq(s"$d/keys", s"$d/cnt")),
+      manifest = b.Manifest(maxEdits = maxEdits))
   }
 
-  /** The persisted BUILD radius of index `name` (1 when absent — every
-    * pre-radius index was distance-1). The radius is part of the index's
-    * identity: probes and appends at a DIFFERENT radius are silently
-    * lossy (a d1 probe on a d2 index misses the length-4/5 dictionary
-    * tail the d2 floor excludes; a d2 probe on a d1 index has no del≤2
-    * keys to meet), so [[fuzzyAgainstIndexWith]] asserts equality and
-    * [[maintainFuzzyDictionary]] reads the radius per batch instead of
-    * trusting a caller-threaded parameter.
-    *
-    * The reading resolves the SERVING keys generation and takes ITS
-    * `_radius` sibling ([[sources.Bucketing.resolvePhysical]] — the same
-    * same-generation discipline the `_meta`/`_stats` siblings use), so
-    * the radius can never be observed from a different generation than
-    * the keys a probe is about to join: it changes exactly at the view
-    * swap, atomically with the postings. A pre-sibling index (stamped
-    * under the legacy shared `{name}_radius` table) still reads through
-    * the fallback.
+  /** The persisted BUILD radius of index `name`. The radius is part of
+    * the index's identity: probes and appends at a DIFFERENT radius are
+    * silently lossy (a d1 probe on a d2 index misses the length-4/5
+    * dictionary tail the d2 floor excludes; a d2 probe on a d1 index has
+    * no del≤2 keys to meet), so [[fuzzyAgainstIndexWith]] asserts
+    * equality and [[maintainFuzzyDictionary]] reads the radius per batch
+    * instead of trusting a caller-threaded parameter.
     */
   def indexRadius(spark: org.apache.spark.sql.SparkSession,
-                  name: String): Int = {
-    def read(t: String): Option[Int] =
-      if (!spark.catalog.tableExists(t)) None
-      else spark.table(t).collect().headOption
-        .map(_.getAs[Int]("max_edits"))
-    val perGen =
-      if (!spark.catalog.tableExists(name)) None
-      else read(s"${graft.sources.Bucketing.resolvePhysical(spark, name)}_radius")
-    perGen.orElse(read(s"${name}_radius")).getOrElse(1)
-  }
+                  name: String): Int =
+    servingKeys(spark, name)._2.maxEdits
 
-  private def stampRadius(spark: org.apache.spark.sql.SparkSession,
-                          phys: String, maxEdits: Int): Unit = {
-    graft.sources.Bucketing.dropWithLocation(spark, s"${phys}_radius")
-    spark.range(1)
-      .select(lit(maxEdits).cast("int").as("max_edits"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${phys}_radius")
+  /** The SERVING keys generation of index `name` and its manifest, read
+    * once off one resolution — the radius changes exactly at the view
+    * swap, atomically with the keys — after the two format guards every
+    * probe, append and fold passes through. Both fail loudly, because
+    * the silent alternative is wrong answers:
+    *  - keys must be xxhash64 longs: a string-keyed generation (written
+    *    before keys were hashed) joins hashed probe keys to nothing and
+    *    silently drops the whole base dictionary;
+    *  - the manifest must carry the build radius: an index written before
+    *    the radius moved into the manifest has none, and guessing 1 would
+    *    let a maintenance loop append d1 keys to a d2 index.
+    * The key check reads the catalog schema, never the data.
+    */
+  private def servingKeys(spark: org.apache.spark.sql.SparkSession,
+                          name: String): (String, graft.sources.Bucketing.Manifest) = {
+    val b = graft.sources.Bucketing
+    val phys = b.resolvePhysical(spark, name)
+    val keyType = spark.table(phys).schema.find(_.name == "k").map(_.dataType)
+    require(keyType.contains(org.apache.spark.sql.types.LongType),
+      s"fuzzy index '$name' stores ${keyType.getOrElse("no")} keys, not the " +
+        "xxhash64 longs probes and appends produce — rebuild it with " +
+        "buildFuzzyIndexGen")
+    val m = b.manifestOf(spark, phys)
+    require(m.maxEdits > 0,
+      s"fuzzy index '$name' has no edit radius in its manifest (written " +
+        "by an older format) — rebuild it with buildFuzzyIndexGen")
+    (phys, m)
   }
 
   /** One batch's (term, cnt) rows — shared by build and append so the
@@ -452,12 +444,16 @@ object Fuzzy {
                             deltaDir: Option[String] = None,
                             maxEdits: Int = 1): DataFrame = {
     val b = graft.sources.Bucketing
-    val (baseK, deltaK) = b.layerParts(
-      spark, name, deltaDir.map(d => s"$d/keys"), Seq("k", "term"))
+    // ONE resolution of the keys generation serves its rows, its delta
+    // watermark and the radius check
+    val (keysPhys, keysMeta) = servingKeys(spark, name)
+    val baseK = spark.table(keysPhys).select("k", "term")
+    val deltaK = deltaDir.flatMap(d => b.liveDelta(spark, s"$d/keys", baseK,
+      Seq("k", "term"), keysMeta.foldedBatchMax))
     val (baseC, deltaC) = b.layerParts(
       spark, s"${name}_cnt", deltaDir.map(d => s"$d/cnt"), Seq("term", "cnt"))
     graft.functions.DeleteNeighborhoodKeys.register(spark)
-    val built = indexRadius(spark, name)
+    val built = keysMeta.maxEdits
     require(built == maxEdits,
       s"index '$name' was built at edit radius $built; probing at " +
         s"$maxEdits is silently lossy — probe at the build radius or rebuild")
@@ -491,11 +487,14 @@ object Fuzzy {
     * [[sources.Bucketing.compactLayerGen]]): keys fold to distinct,
     * counts fold to per-term sums — representation only; probes already
     * aggregate base ∪ delta, so answers are identical across the fold.
+    * The keys generation passes the same format guards as a probe, and
+    * its manifest (radius included) carries over to the folded one.
     */
   def compactFuzzyIndexGen(spark: org.apache.spark.sql.SparkSession,
                            name: String, deltaDir: String,
                            buckets: Int = 8): Unit = {
     val b = graft.sources.Bucketing
+    servingKeys(spark, name)
     b.compactLayerGen(spark, name, s"$deltaDir/keys",
       "k", Seq("k", "term"), buckets, compact = true,
       fold = _.distinct())

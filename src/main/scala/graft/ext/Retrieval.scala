@@ -235,28 +235,14 @@ object Retrieval {
     * postings-side exchange (the bucket layout IS the token partitioning,
     * so even the df window rides it shuffle-free), index build cost
     * amortized over every query batch — the same build-once/probe-many
-    * posture as [[Similarity.buildIvfIndex]] and [[Dedup.buildLshIndex]].
+    * posture as [[Similarity.buildIvfIndex]]. The one table writer of the
+    * family: [[buildBm25IndexGen]] writes each generation through it.
     */
   def buildBm25Index(documents: DataFrame, table: String, buckets: Int = 8): Unit = {
     graft.sources.Bucketing.writeBucketed(
       bm25Postings(documents), table, "token", buckets, sortCols = Seq("token"))
     graft.sources.Bucketing.dropWithLocation(documents.sparkSession, s"${table}_stats")
     bm25StatsDelta(documents).write.mode("overwrite")
-      .format("parquet").saveAsTable(s"${table}_stats")
-  }
-
-  /** Append a new doc batch to a persisted index: postings rows (same
-    * bucket spec, so searches stay exchange-free as the corpus grows) plus
-    * one additive stats row. Nothing already stored is touched — df and
-    * avgdl are DERIVED at search time, so unlike a df-denormalized layout
-    * there is no stale-weight window and no rebuild debt; this is why the
-    * postings schema stores only per-doc facts.
-    */
-  def appendBm25Index(newDocs: DataFrame, table: String, buckets: Int = 8): Unit = {
-    bm25Postings(newDocs)
-      .write.format("parquet").mode("append")
-      .bucketBy(buckets, "token").sortBy("token").saveAsTable(table)
-    bm25StatsDelta(newDocs).write.mode("append")
       .format("parquet").saveAsTable(s"${table}_stats")
   }
 
@@ -530,31 +516,6 @@ object Retrieval {
       .select("query_id", "rank", "doc_id", "score_fp")
   }
 
-  /** Compaction — the re-balance half of maintenance that [[appendBm25Index]]
-    * defers, mirroring [[Similarity.compactIvfIndex]]: every append lands
-    * one file set per bucket, so a long append history accumulates small
-    * files per bucket and batch-count rows in the stats table. Compaction
-    * rewrites the postings aligned (one file per bucket) and folds the
-    * stats deltas into a single row. Layout-only: df/avgdl re-derive per
-    * search either way, so answers cannot change (spec-asserted). The rows
-    * are eagerly materialized before the in-place overwrite; a production
-    * deployment writes generation N+1 and swaps a view.
-    */
-  def compactBm25Index(spark: SparkSession, table: String, buckets: Int = 8): Unit = {
-    val postings = spark.table(table)
-      .select("doc_id", "token", "tf", "dl").localCheckpoint(true)
-    val stats = spark.table(s"${table}_stats")
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("total_tokens")).cast("long").as("total_tokens"))
-      .localCheckpoint(true)
-    try {
-      graft.sources.Bucketing.writeBucketed(
-        postings, table, "token", buckets, sortCols = Seq("token"), compact = true)
-      graft.sources.Bucketing.dropWithLocation(spark, s"${table}_stats")
-      stats.write.mode("overwrite").format("parquet").saveAsTable(s"${table}_stats")
-    } finally { postings.unpersist(); stats.unpersist() }
-  }
-
   /** Hard-negative mining for embedding-model training (the DPR recipe):
     * per query, the documents a LEXICAL retriever ranks highly that the
     * embedding space does NOT consider neighbors — plausible-but-wrong
@@ -814,11 +775,10 @@ object Retrieval {
                           maxDfPpm: Int = DfCeilOff): DataFrame = {
     val b = graft.sources.Bucketing
     val phys = b.resolvePhysical(spark, table)
-    val folded = b.foldedBatchMaxOf(spark, phys)
+    val folded = b.manifestOf(spark, phys).foldedBatchMax
     def unfolded(path: String, base: DataFrame,
                  cols: Seq[String]): Option[DataFrame] =
-      readDelta(spark, path, base, cols)
-        .map(_.filter(col("batch_id") > folded).drop("batch_id"))
+      b.liveDelta(spark, path, base, cols, folded)
     val base = spark.table(phys)
     val statsBase = spark.table(statsSiblingOf(spark, phys, table))
     val stats = unfolded(s"$deltaDir/stats", statsBase,
@@ -870,15 +830,9 @@ object Retrieval {
   }
 
   // ---- generation-swap index lifecycle ----
-  // The ONLY delta-fold compaction story: the in-place delta fold this
-  // library once carried (append delta into the bucketed table, rewrite,
-  // delete the delta) had an unavoidable run-from-one-place caveat — a
-  // reader planning against files the rewrite deletes — so it was retired
-  // in favor of the generation swap below, which serves the same plain
-  // search surface and is safe under concurrent readers and maintenance.
-  // Same search/maintenance surface as the in-place form — `table` and
-  // `${table}_stats` resolve through [[searchBm25Index]] /
-  // [[searchBm25IndexWith]] unchanged — but the names are VIEWS over
+  // The family's one lifecycle: `table` and `${table}_stats` resolve
+  // through [[searchBm25Index]] / [[searchBm25IndexWith]] like plain
+  // tables, but the names are VIEWS over
   // `__g<N>` physical tables (see sources.Bucketing), so compaction can
   // run WHILE queries serve: generation N+1 is written from generation N
   // (nothing is overwritten in place), one CREATE OR REPLACE VIEW swaps,
@@ -901,13 +855,12 @@ object Retrieval {
     * current highest batch_id, so the retained delta partitions —
     * whose documents the rebuilt base already contains — stay below the
     * watermark instead of double-counting
-    * ([[sources.Bucketing.stampRebuildWatermark]]).
+    * ([[sources.IndexLifecycle.buildGeneration]]'s `deltaPaths`).
     */
   def buildBm25IndexGen(documents: DataFrame, table: String,
                         buckets: Int = 8,
                         deltaDir: Option[String] = None): Unit = {
     val spark = documents.sparkSession
-    val b = graft.sources.Bucketing
     // the shared skeleton (sources.IndexLifecycle) owns adoptable-check /
     // serving-generation capture / numbering / swap / retire. The stats
     // table is a SIBLING of the postings generation (`{phys}_stats`, not
@@ -917,16 +870,9 @@ object Retrieval {
     // postings swap stays the consistency point; retirement drops the
     // sibling with its generation ([[sources.Bucketing.dropGeneration]]).
     graft.sources.IndexLifecycle.buildGeneration(spark, Seq(table),
-      write = phys => {
-        b.writeBucketed(bm25Postings(documents), phys.head, "token",
-          buckets, sortCols = Seq("token"))
-        b.dropWithLocation(spark, s"${phys.head}_stats")
-        bm25StatsDelta(documents).write.mode("overwrite")
-          .format("parquet").saveAsTable(s"${phys.head}_stats")
-      },
-      stampWatermark = phys => deltaDir.foreach(d =>
-        b.stampRebuildWatermark(spark, phys.head,
-          Seq(s"$d/postings", s"$d/stats"))),
+      write = phys => buildBm25Index(documents, phys.head, buckets),
+      deltaPaths = deltaDir.toSeq.flatMap(d =>
+        Seq(s"$d/postings", s"$d/stats")),
       extraSwaps = phys =>
         Seq((s"${table}_stats", s"${phys.head}_stats")))
   }
@@ -961,7 +907,8 @@ object Retrieval {
     val srcGen = b.generationNumberOf(table, srcPhys)
     val g = b.currentGeneration(spark, table) + 1
     val phys = b.generationName(table, g)
-    val prevFolded = b.foldedBatchMaxOf(spark, srcPhys)
+    val src = b.manifestOf(spark, srcPhys)
+    val prevFolded = src.foldedBatchMax
     // one listing per delta dir: the folded rows AND the recorded watermark
     // both come from these frames' snapshotted file listings, so a
     // maintenance batch landing mid-compaction is either wholly folded and
@@ -1009,7 +956,7 @@ object Retrieval {
       sortCols = Seq("token"), compact = true)
     b.dropWithLocation(spark, s"${phys}_stats")
     stats.write.mode("overwrite").format("parquet").saveAsTable(s"${phys}_stats")
-    b.writeMeta(spark, phys, newFolded)
+    b.writeMeta(spark, phys, src.copy(foldedBatchMax = newFolded))
     b.swapView(spark, table, phys)
     b.swapView(spark, s"${table}_stats", s"${phys}_stats")
     b.gcDeltaPartitions(spark, s"$deltaDir/postings", prevFolded)

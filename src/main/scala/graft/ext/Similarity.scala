@@ -82,7 +82,7 @@ object Similarity {
   val NoMaxBucket = 0
 
   /** Inherit sentinel for the generation-lifecycle folds: take the cap
-    * from the CURRENT generation's manifest ([[sources.Bucketing.maxBucketOf]]
+    * from the CURRENT generation's manifest ([[sources.Bucketing.manifestOf]]
     * — persisted by [[buildIvfIndexGen]] and re-persisted by every fold),
     * so a capped index keeps its shard guard across auto-folds without
     * every maintenance call site restating it. A manifest that predates
@@ -765,32 +765,6 @@ object Similarity {
     withShard.select("cluster_id", "shard", "m", "vec_id", "embedding")
   }
 
-  /** Compaction — the re-balance half of index maintenance that
-    * [[maintainIvfIndex]] defers: appends arrive unsharded (m = 1), so a
-    * posting list that grows past `maxBucket` accumulates into one task's
-    * gather until compaction re-stamps shard factors from CURRENT counts
-    * and rewrites the bucketed layout. Assignments are NOT recomputed —
-    * cluster ids are already stored, so compaction is a layout pass, not a
-    * model pass. The rows are eagerly materialized before the overwrite
-    * (this single-table form rewrites in place; a production deployment
-    * writes generation N+1 and swaps a view — same shapes, plus an atomic
-    * cutover).
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-                      buckets: Int = 8, maxBucket: Int = NoMaxBucket): Unit = {
-    val rows = spark.table(table)
-      .select("cluster_id", "vec_id", "embedding").localCheckpoint(true)
-    try
-      graft.sources.Bucketing.writeBucketed(
-        withShardFactors(rows, maxBucket), table, "cluster_id", buckets)
-    finally rows.unpersist()
-  }
-
-  // The ONLY delta-fold compaction story is the generation swap below —
-  // the in-place delta fold this library once carried was retired with
-  // its run-from-one-place caveat (see the note in Retrieval's
-  // generation-swap section).
-
   /** [[buildIvfIndex]] in the generation-swap layout (see
     * sources.Bucketing): the physical posting table lands as a numbered
     * generation and `table` becomes a view, so [[compactIvfIndexGen]] can
@@ -805,7 +779,7 @@ object Similarity {
     * a live delta layer, quiesce the maintenance loop and pass `deltaDir`
     * so the retained delta partitions — whose vectors the rebuilt base
     * already contains — are stamped folded instead of double-counting
-    * ([[sources.Bucketing.stampRebuildWatermark]]).
+    * ([[sources.IndexLifecycle.buildGeneration]]'s `deltaPaths`).
     */
   def buildIvfIndexGen(embeddings: DataFrame, table: String, k: Int = IvfClusters,
                        buckets: Int = 8, maxBucket: Int = NoMaxBucket,
@@ -816,45 +790,22 @@ object Similarity {
     // generation's persisted cap (symmetric with the fold's inherit; a
     // fresh build has nothing to inherit → uncapped); any other
     // non-positive value is uncapped — a raw negative must never reach
-    // the manifest as a nonsense "cap". The serving generation comes from
-    // the SKELETON'S capture (buildGenerationWithServing) — a separate
-    // liveGeneration read here could diverge from the snapshot retirement
-    // runs against if a fold swapped between the two reads. Resolved ONCE
-    // (memoized across the write/stampWatermark callbacks, which the
-    // skeleton invokes in that order): a second maxBucketOf read later in
-    // the build could find the captured generation's manifest already
-    // retired by concurrent folds and stamp the watermark with a
-    // DIFFERENT cap than the postings were just written with.
-    var capMemo = Int.MinValue
-    def capFrom(serving: Map[String, Int]): Int = {
-      if (capMemo == Int.MinValue)
-        capMemo =
-          if (maxBucket == InheritMaxBucket && serving(table) > 0)
-            b.maxBucketOf(spark, b.generationName(table, serving(table)),
-              NoMaxBucket)
-          else math.max(maxBucket, NoMaxBucket)
-      capMemo
-    }
+    // the manifest as a nonsense "cap". Read once, before the skeleton
+    // runs: a rebuild runs with the maintenance loop quiesced, so no
+    // fold can swap the serving generation between this read and the
+    // build, and the one cap feeds both the postings and the manifest.
+    val cap =
+      if (maxBucket == InheritMaxBucket && spark.catalog.tableExists(table))
+        b.manifestOf(spark, b.resolvePhysical(spark, table)).maxBucket
+      else math.max(maxBucket, NoMaxBucket)
     // the shared skeleton (sources.IndexLifecycle) owns adoptable-check /
-    // serving-generation capture / numbering / swap / retire; family-
-    // specific: the shard-factor-stamped postings write, the capped
-    // build's cap manifest (persisted so later folds can inherit the
-    // shard guard — uncapped builds keep the manifest-less fresh-build
-    // shape, absent ≡ uncapped, −1 folded), and the cap-carrying
-    // rebuild watermark stamp.
-    graft.sources.IndexLifecycle.buildGenerationWithServing(spark, Seq(table),
-      write = (phys, serving) => {
-        val cap = capFrom(serving)
-        val assigned = assignToCentroids(embeddings, k, 1)
-          .select("cluster_id", "vec_id", "embedding")
-        b.writeBucketed(withShardFactors(assigned, cap), phys.head,
-          "cluster_id", buckets)
-        if (cap > NoMaxBucket)
-          b.writeMeta(spark, phys.head, -1L, cap)
-      },
-      stampWatermark = (phys, serving) => deltaDir.foreach(d =>
-        b.stampRebuildWatermark(spark, phys.head, Seq(s"$d/postings"),
-          capFrom(serving))))
+    // serving-generation capture / numbering / manifest / swap / retire;
+    // an uncapped fresh build keeps the manifest-less shape (absent ≡
+    // uncapped, −1 folded)
+    graft.sources.IndexLifecycle.buildGeneration(spark, Seq(table),
+      write = phys => buildIvfIndex(embeddings, phys.head, k, buckets, cap),
+      deltaPaths = deltaDir.map(d => s"$d/postings").toSeq,
+      manifest = b.Manifest(maxBucket = cap))
   }
 
   /** Generation-swap compaction for the IVF index: generation N+1 is
@@ -868,7 +819,7 @@ object Similarity {
     * base ∪ delta reader filters the delta by its resolved generation's
     * watermark ([[searchIvfIndexWith]]), so the swap-to-cleanup window
     * cannot double-count a vector into two top-k slots. `maxBucket` has
-    * no default deliberately, like the in-place form: compaction
+    * no default deliberately: compaction
     * re-stamps EVERY row's shard factors, so the caller either restates
     * the cap (also the admin workflow for CHANGING it — the restated cap
     * is re-persisted in the new generation's manifest) or passes
@@ -887,12 +838,14 @@ object Similarity {
     // Bucketing.generationNumberOf): orphan generations must not cost
     // the serving generation its reader grace
     val srcGen = b.generationNumberOf(table, srcPhys)
-    val prevCap = b.maxBucketOf(spark, srcPhys, NoMaxBucket)
+    // ONE manifest read: the inherited cap and the folded watermark
+    val src = b.manifestOf(spark, srcPhys)
+    val prevCap = src.maxBucket
     val cap = if (maxBucket == InheritMaxBucket) prevCap
       else math.max(maxBucket, NoMaxBucket)
     val g = b.currentGeneration(spark, table) + 1
     val phys = b.generationName(table, g)
-    val prevFolded = b.foldedBatchMaxOf(spark, srcPhys)
+    val prevFolded = src.foldedBatchMax
     // ONE listing of the delta dir: the recorded watermark and the folded
     // rows come from the same snapshotted frame ([[Bucketing.maxBatchIdOf]]),
     // so a maintenance batch landing mid-compaction is either wholly folded
@@ -925,7 +878,8 @@ object Similarity {
       .map(base.unionByName(_)).getOrElse(base)
     b.writeBucketed(withShardFactors(rows, cap), phys,
       "cluster_id", buckets)
-    b.writeMeta(spark, phys, newFolded, cap)
+    b.writeMeta(spark, phys, src.copy(foldedBatchMax = newFolded,
+      maxBucket = cap))
     b.swapView(spark, table, phys)
     b.gcDeltaPartitions(spark, s"$deltaDir/postings", prevFolded)
     b.retireBelow(spark, table, srcGen)
@@ -1053,11 +1007,9 @@ object Similarity {
     // watermark (−1 on plain layouts = keep everything): under a
     // concurrent generation-swap compaction, folded batches drop out the
     // instant the new generation is visible — no double-counted vectors
-    val folded = b.foldedBatchMaxOf(spark, phys)
-    graft.sources.Bucketing
-      .readParquetIfExists(spark, s"$deltaDir/postings", b.deltaSchema(base,
-        Seq("cluster_id", "shard", "m", "vec_id", "embedding")))
-      .map(_.filter(col("batch_id") > folded).drop("batch_id")) match {
+    b.liveDelta(spark, s"$deltaDir/postings", base,
+        Seq("cluster_id", "shard", "m", "vec_id", "embedding"),
+        b.manifestOf(spark, phys).foldedBatchMax) match {
       case None => ivfSearch(base, topK)
       case Some(dp) =>
         // SPLIT search, pair coverage by construction (each candidate pair

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Bucketed-table layout for co-located joins — the 100 TB path for the
   * enrichment join (J1) when the user dimension outgrows broadcast range
@@ -85,8 +85,7 @@ object Bucketing {
     * would still fail the job; that is why the generation-swap layout
     * never deletes eagerly (folded partitions get one compaction cycle of
     * grace via [[gcDeltaPartitions]], and readers exclude them by
-    * watermark), while the in-place rewrites keep their documented
-    * run-from-one-place caveat.
+    * watermark).
     */
   def readParquetIfExists(spark: SparkSession, path: String,
                           schema: StructType): Option[DataFrame] = {
@@ -125,19 +124,9 @@ object Bucketing {
   def deltaSchema(base: DataFrame, cols: Seq[String]): StructType =
     StructType(cols.map(base.schema(_)) :+ BatchIdField)
 
-  /** Delete a delta layer's directories after compaction has folded them
-    * into the base table.
-    */
-  def deleteDirs(spark: SparkSession, paths: Seq[String]): Unit =
-    paths.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    }
-
   // ---- generation-swap layout ----
-  // The concurrent-compaction answer the in-place rewrites defer to: the
-  // logical index name is a VIEW over `<name>__g<N>` physical tables.
+  // The one index lifecycle: the logical index name is a VIEW over
+  // `<name>__g<N>` physical tables.
   // Compaction writes generation N+1 from generation N (sources are never
   // overwritten, so no eager materialization and no torn reads), then one
   // CREATE OR REPLACE VIEW repoints the name. A search that already
@@ -210,7 +199,6 @@ object Bucketing {
       dropWithLocation(spark, generationName(table, g))
       dropWithLocation(spark, s"${generationName(table, g)}_stats")
       dropWithLocation(spark, s"${generationName(table, g)}_meta")
-      dropWithLocation(spark, s"${generationName(table, g)}_radius")
     }
 
   /** Generation number encoded in a physical generation table name
@@ -278,120 +266,86 @@ object Bucketing {
           if r.catalogTable.isDefined => r.catalogTable.get.identifier.table
     }.getOrElse(table)
 
-  /** Write a generation's one-row manifest: the highest delta `batch_id`
-    * it has folded (−1 = none). Base ∪ delta readers filter the delta to
-    * batches ABOVE their resolved generation's watermark, which closes
-    * the double-count window between a compaction's view swap and its
-    * delta cleanup — after the swap the folded batches simply stop
-    * qualifying.
+  /** A generation's manifest — the ONE row of generation-scoped metadata
+    * (`${phys}_meta`), written once per generation before its first swap
+    * ([[IndexLifecycle]] invariant 4) and read once per resolution
+    * ([[manifestOf]]):
     *
-    * `maxBucket` (> 0) additionally persists a hot-bucket cap in the
-    * manifest, so threshold-gated auto-folds can inherit a capped build's
-    * shard guard instead of requiring every maintenance call site to
-    * restate it ([[maxBucketOf]]; the restate-or-silently-unshard footgun
-    * this closes is the cap analogue of [[bucketCountOf]]'s bucket-count
-    * inheritance). 0 = uncapped, written as-is — an ABSENT manifest and a
-    * cap of 0 read back identically.
+    *  - `foldedBatchMax`: the highest delta `batch_id` the generation has
+    *    folded (−1 = none). Base ∪ delta readers filter the delta to
+    *    batches ABOVE their resolved generation's watermark, which closes
+    *    the double-count window between a compaction's view swap and its
+    *    delta cleanup — after the swap the folded batches simply stop
+    *    qualifying.
+    *  - `maxBucket`: the IVF hot-bucket cap (0 = uncapped), so
+    *    threshold-gated auto-folds inherit a capped build's shard guard
+    *    instead of every maintenance call site restating it — the cap
+    *    analogue of [[bucketCountOf]]'s bucket-count inheritance.
+    *  - `maxEdits`: the fuzzy dictionary's build radius (0 = not recorded;
+    *    the fuzzy family refuses such an index rather than guess).
+    *
+    * Layout facts the catalog already holds (bucket count, key encoding —
+    * the key column's type) are not repeated here. The all-default
+    * manifest is never written: an ABSENT manifest reads back as it, so a
+    * fresh uncapped build of a non-fuzzy family pays no manifest write
+    * and its readers no manifest read.
     */
-  def writeMeta(spark: SparkSession, phys: String, foldedMax: Long,
-                maxBucket: Int = 0): Unit = {
+  final case class Manifest(foldedBatchMax: Long = -1L, maxBucket: Int = 0,
+                            maxEdits: Int = 0)
+
+  private val ManifestSchema = StructType(Seq(
+    StructField("folded_batch_max", LongType, nullable = false),
+    StructField("max_bucket", IntegerType, nullable = false),
+    StructField("max_edits", IntegerType, nullable = false)))
+
+  /** Write generation `phys`'s manifest — its one writer. */
+  def writeMeta(spark: SparkSession, phys: String, m: Manifest): Unit = {
     dropWithLocation(spark, s"${phys}_meta")
-    spark.createDataFrame(
-        java.util.Arrays.asList(org.apache.spark.sql.Row(foldedMax, maxBucket)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("folded_batch_max",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("max_bucket",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
+    spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(m.foldedBatchMax, m.maxBucket, m.maxEdits)),
+        ManifestSchema)
       .write.mode("overwrite").format("parquet").saveAsTable(s"${phys}_meta")
   }
 
-  /** Stamp a REBUILT generation's manifest with the delta layer's current
-    * highest batch_id — the rebuild counterpart of a compaction watermark.
-    * A fresh build writes no manifest (absent ≡ −1), which is only correct
-    * when no delta layer exists: rebuilding an index whose maintenance
-    * loop has already landed batches would otherwise expose every
-    * retained/unfolded delta partition against a base that ALREADY
-    * contains those documents — double-counted rows (and, for a
-    * renumbering rebuild like Jaccard's, stale-tid collisions). Callers
-    * rebuild with the maintenance loop QUIESCED (stop the stream, rebuild
-    * over the full current corpus, restart), so the listing here is exact:
-    * everything currently in the delta is superseded by the rebuilt base
-    * and marked folded. No-op when every path is absent/empty.
-    */
-  def stampRebuildWatermark(spark: SparkSession, phys: String,
-                            deltaPaths: Seq[String]): Unit =
-    stampRebuildWatermark(spark, Seq(phys), deltaPaths)
-
-  /** Single-table [[stampRebuildWatermark]] carrying a hot-bucket cap
-    * (explicit overload: Scala allows default arguments on only one
-    * overloaded alternative, and the Seq form keeps them).
-    */
-  def stampRebuildWatermark(spark: SparkSession, phys: String,
-                            deltaPaths: Seq[String],
-                            maxBucket: Int): Unit =
-    stampRebuildWatermark(spark, Seq(phys), deltaPaths, maxBucket)
-
-  /** [[stampRebuildWatermark]] for a multi-table layout: the delta dirs
-    * are listed ONCE and every physical table gets the same stamp.
-    * `maxBucket` is carried into the stamped manifest (a capped rebuild
-    * must not lose its persisted shard guard to the watermark stamp).
-    */
-  def stampRebuildWatermark(spark: SparkSession, physes: Seq[String],
-                            deltaPaths: Seq[String],
-                            maxBucket: Int = 0): Unit = {
-    val m = deltaPaths.map(maxBatchId(spark, _)).foldLeft(-1L)(math.max)
-    if (m >= 0L) physes.foreach(writeMeta(spark, _, m, maxBucket))
-  }
-
-  /** Folded-batch watermark of the generation behind `table` (−1 when the
-    * layout has no manifest — plain tables, pre-watermark indexes).
+  /** The manifest of an ALREADY-RESOLVED physical generation — the one
+    * reader, one catalog lookup plus (when the manifest exists) one
+    * single-row job. Absent manifest ≡ [[Manifest]]'s defaults; a manifest
+    * written before a column existed reads that column's default (0), so
+    * every older layout stays readable.
     *
-    * Resolves the generation itself; a reader that ALSO reads the postings
-    * or stats must instead resolve ONCE ([[resolvePhysical]]) and take the
-    * watermark from that same generation via [[foldedBatchMaxOf]] —
-    * resolving twice opens a window where a concurrent compaction swap
-    * lands between the two resolutions and the reader mixes generations
-    * (new watermark against old postings double-drops unfolded batches;
-    * old watermark against new base double-counts just-folded ones).
+    * Readers that also read the generation's postings or stats resolve
+    * ONCE ([[resolvePhysical]]) and pass that name here — resolving twice
+    * opens a window where a concurrent compaction swap lands between the
+    * resolutions and the reader mixes generations (new watermark against
+    * old postings drops unfolded batches; old watermark against new base
+    * double-counts just-folded ones).
     */
-  def foldedBatchMax(spark: SparkSession, table: String): Long =
-    foldedBatchMaxOf(spark, resolvePhysical(spark, table))
-
-  /** [[foldedBatchMax]] for an ALREADY-RESOLVED physical generation: reads
-    * `${phys}_meta` directly, no view resolution — the single-resolution
-    * read path every base ∪ delta reader uses so postings, stats and
-    * watermark all come from one generation.
-    */
-  def foldedBatchMaxOf(spark: SparkSession, phys: String): Long = {
+  def manifestOf(spark: SparkSession, phys: String): Manifest = {
     val meta = s"${phys}_meta"
-    if (spark.catalog.tableExists(meta))
-      spark.table(meta).collect().headOption
-        .map(_.getAs[Long]("folded_batch_max")).getOrElse(-1L)
-    else -1L
-  }
-
-  /** Hot-bucket cap persisted in the generation's manifest ([[writeMeta]]);
-    * `default` when the manifest is absent or predates cap persistence
-    * (pre-cap manifests carry only `folded_batch_max`). Like
-    * [[foldedBatchMaxOf]], takes an ALREADY-RESOLVED physical generation so
-    * cap and postings come from one resolution.
-    */
-  def maxBucketOf(spark: SparkSession, phys: String, default: Int): Int = {
-    val meta = s"${phys}_meta"
-    if (!spark.catalog.tableExists(meta)) default
+    if (!spark.catalog.tableExists(meta)) Manifest()
     else {
       val df = spark.table(meta)
-      if (!df.schema.fieldNames.contains("max_bucket")) default
-      else df.collect().headOption
-        .map(_.getAs[Int]("max_bucket")).getOrElse(default)
+      val has = df.schema.fieldNames.toSet
+      df.collect().headOption.fold(Manifest()) { r =>
+        def int(c: String): Int = if (has(c)) r.getAs[Int](c) else 0
+        Manifest(r.getAs[Long]("folded_batch_max"), int("max_bucket"),
+          int("max_edits"))
+      }
     }
   }
 
-  /** Fail fast when `table` already exists as a plain TABLE — i.e. was
-    * built by the in-place lifecycle. The generation-swap and in-place
-    * lifecycles are mutually exclusive per name: a swap builder that ran
-    * anyway would write its `__g1` generation and only THEN hit
+  /** Folded-batch watermark of the generation behind `table` (−1 when the
+    * layout has no manifest). Resolves the generation itself — for
+    * pressure readings only; see [[manifestOf]] for readers that also
+    * read the postings.
+    */
+  def foldedBatchMax(spark: SparkSession, table: String): Long =
+    manifestOf(spark, resolvePhysical(spark, table)).foldedBatchMax
+
+  /** Fail fast when `table` already exists as a plain TABLE — e.g. was
+    * written by a plain table writer (`buildBm25Index`). A plain table
+    * cannot atomically become a view: a swap builder that ran anyway
+    * would write its `__g1` generation and only THEN hit
     * `CREATE OR REPLACE VIEW` over the existing table (AnalysisException),
     * leaving an orphan generation and a half-migrated name. Called by the
     * `*Gen` builders BEFORE any write, so the failure is clean and the fix
@@ -402,9 +356,8 @@ object Bucketing {
     if (spark.catalog.tableExists(table) &&
         spark.catalog.getTable(table).tableType != "VIEW")
       throw new IllegalStateException(
-        s"`$table` already exists as a plain table (in-place lifecycle); " +
-          "the generation-swap and in-place lifecycles are mutually " +
-          "exclusive per name. Drop it (Bucketing.dropWithLocation) or " +
+        s"`$table` already exists as a plain table, which cannot become " +
+          "a generation-swap view. Drop it (Bucketing.dropWithLocation) or " +
           "use a different name for the generation-swap index.")
 
   /** Highest `batch_id` in an already-opened delta frame (−1 when empty).
@@ -477,18 +430,24 @@ object Bucketing {
     import org.apache.spark.sql.functions.col
     val phys = resolvePhysical(spark, table)
     val base = spark.table(phys).select(cols.map(col): _*)
-    val delta = deltaPath.flatMap { p =>
-      val folded = foldedBatchMaxOf(spark, phys)
-      readParquetIfExists(spark, p, deltaSchema(base, cols))
-        .map { d =>
-          val live = d.filter(col("batch_id").cast("long") > folded)
-          excludeBatch.map(bId =>
-              live.filter(col("batch_id").cast("long") =!= bId))
-            .getOrElse(live)
-            .drop("batch_id")
-        }
+    (base, deltaPath.flatMap(liveDelta(spark, _, base, cols,
+      manifestOf(spark, phys).foldedBatchMax, excludeBatch)))
+  }
+
+  /** The delta rows of one index layer ABOVE watermark `folded` (and,
+    * with `excludeBatch`, outside that batch's partition), projected to
+    * `cols` typed as `base` — the delta half of [[layerParts]], for
+    * readers that already hold the resolved generation's manifest.
+    */
+  def liveDelta(spark: SparkSession, path: String, base: DataFrame,
+                cols: Seq[String], folded: Long,
+                excludeBatch: Option[Long] = None): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    readParquetIfExists(spark, path, deltaSchema(base, cols)).map { d =>
+      val live = d.filter(col("batch_id") > folded)
+      excludeBatch.map(bId => live.filter(col("batch_id") =!= bId))
+        .getOrElse(live).drop("batch_id")
     }
-    (base, delta)
   }
 
   /** Write one foreachBatch batch's rows into a delta layer under its own
@@ -531,7 +490,8 @@ object Bucketing {
     val srcGen = generationNumberOf(table, srcPhys)
     val g = currentGeneration(spark, table) + 1
     val phys = generationName(table, g)
-    val prevFolded = foldedBatchMaxOf(spark, srcPhys)
+    val src = manifestOf(spark, srcPhys)
+    val prevFolded = src.foldedBatchMax
     val delta = readParquetIfExists(spark, deltaPath,
       deltaSchema(spark.table(srcPhys), cols))
     val newFolded =
@@ -566,35 +526,15 @@ object Bucketing {
     // the window between the two writes reads folded rows at watermark −1
     // and double-counts them against the delta. A crash in between leaves
     // an orphan `_meta` the generation numbering skips past and
-    // [[dropGeneration]] eventually retires.
-    writeMeta(spark, phys, newFolded)
+    // [[dropGeneration]] eventually retires. The source manifest carries
+    // over with only the watermark replaced, so generation-scoped layout
+    // facts (the fuzzy radius) travel with every fold.
+    writeMeta(spark, phys, src.copy(foldedBatchMax = newFolded))
     writeBucketed(rows, phys, key, buckets, compact = compact)
-    // generation-scoped index-identity metadata (today: the fuzzy
-    // family's `_radius` sibling) travels WITH the generation: carry the
-    // source generation's sibling onto the new one before the swap, or
-    // the first compaction would silently reset a d2 index to the
-    // default-1 reading the sibling exists to prevent.
-    copySibling(spark, srcPhys, phys, "_radius")
     swapView(spark, table, phys)
     gcDeltaPartitions(spark, deltaPath, prevFolded)
     retireBelow(spark, table, srcGen)
   }
-
-  /** Copy a one-row generation-scoped sibling table (`{src}{suffix}` →
-    * `{dst}{suffix}`) when the source has one — the carry-forward for
-    * index-identity metadata that must swap atomically with the
-    * generation it describes (read via [[resolvePhysical]] + suffix, so
-    * it can never be observed from a different generation than the
-    * postings). No-op when the source sibling is absent.
-    */
-  def copySibling(spark: SparkSession, src: String, dst: String,
-                  suffix: String): Unit =
-    if (spark.catalog.tableExists(s"$src$suffix")) {
-      dropWithLocation(spark, s"$dst$suffix")
-      spark.table(s"$src$suffix")
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"$dst$suffix")
-    }
 
   /** Compaction-pressure reading: how many delta `batch_id=` partitions
     * sit ABOVE the resolved generation's folded watermark. One directory

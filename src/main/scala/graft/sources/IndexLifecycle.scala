@@ -3,13 +3,13 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** The ONE generation-swap lifecycle skeleton behind every persisted index
-  * family (LSH bands, exact-Jaccard prefix, fuzzy dictionary, BM25
-  * postings, IVF postings — `ext.Dedup`, `ext.Fuzzy`, `ext.Retrieval`,
-  * `ext.Similarity`). Each family used to carry its own copy of this
-  * sequence, and the subtlest bugs in the repo's history lived in the
-  * copies drifting (orphan-manifest numbering, zero-grace retirement,
-  * swap-window double counts, the radius stamp racing the swap) — the
-  * skeleton now exists once, with the invariants stated once:
+  * family (LSH bands, exact-Jaccard prefix, substring spans, fuzzy
+  * dictionary, BM25 postings, IVF postings — `ext.Dedup`, `ext.Fuzzy`,
+  * `ext.Retrieval`, `ext.Similarity`). Each family used to carry its own
+  * copy of this sequence, and the subtlest bugs in the repo's history
+  * lived in the copies drifting (orphan-manifest numbering, zero-grace
+  * retirement, swap-window double counts, the radius stamp racing the
+  * swap) — the skeleton now exists once, with the invariants stated once:
   *
   *  1. every logical layer name must be swap-adoptable
   *     ([[Bucketing.requireSwapAdoptable]] — a pre-existing PLAIN table
@@ -27,14 +27,15 @@ import org.apache.spark.sql.SparkSession
   *     implies its siblings at `__gN` exist — per-layer numbering could
   *     skew after a crashed compaction and silently disable that
   *     atomicity path;
-  *  4. ALL physical tables, watermark stamps and generation-scoped
-  *     metadata (the fuzzy radius, the IVF cap manifest) are written
-  *     BEFORE any view swaps: the first view repoint is the single
-  *     atomic step at which a reader can observe the new generation, so
-  *     nothing observable can pair one generation's postings with
-  *     another's metadata. A crash anywhere before the swaps leaves
-  *     orphan tables the next build numbers past and retirement
-  *     eventually drops;
+  *  4. one manifest row per generation, written once, before the first
+  *     swap ([[Bucketing.Manifest]]: the rebuild watermark, the IVF cap,
+  *     the fuzzy radius — all generation-scoped metadata there is). All
+  *     physical tables and that row land BEFORE any view swaps: the
+  *     first view repoint is the single atomic step at which a reader
+  *     can observe the new generation, so nothing observable can pair
+  *     one generation's postings with another's metadata. A crash
+  *     anywhere before the swaps leaves orphan tables the next build
+  *     numbers past and retirement eventually drops;
   *  5. views swap in the family's declared layer order (families whose
   *     probes derive siblings from one anchor layer put that anchor
   *     FIRST — its swap is the consistency point);
@@ -58,17 +59,23 @@ object IndexLifecycle {
     * @param write   writes every physical table for the new generation;
     *                receives the physical names positionally matching
     *                `layers`. May also write sibling tables
-    *                (`{phys}_stats`, manifests) — everything it writes is
-    *                invisible until the swaps.
-    * @param stampWatermark rebuild-over-live-delta stamping
-    *                ([[Bucketing.stampRebuildWatermark]]); receives the
-    *                physical names. Leave default for fresh builds —
-    *                callers REBUILDING over a live delta must stamp, or
-    *                retained delta partitions double-count against a base
-    *                that already contains them.
-    * @param preSwap generation-scoped metadata written after the data
-    *                tables but still before any swap (e.g. the fuzzy
-    *                radius sibling).
+    *                (`{phys}_stats`) — everything it writes is invisible
+    *                until the swaps.
+    * @param deltaPaths the family's delta directories when REBUILDING
+    *                over a live delta layer (leave empty for fresh
+    *                builds). Callers rebuild with the maintenance loop
+    *                QUIESCED (stop the stream, rebuild over the full
+    *                current corpus, restart), so the one listing here is
+    *                exact: every layer's manifest records the highest
+    *                batch_id present as folded, and the retained delta
+    *                partitions — whose rows the rebuilt base already
+    *                holds — stop qualifying instead of double-counting
+    *                (and, for a renumbering rebuild like Jaccard's,
+    *                instead of colliding on stale tids).
+    * @param manifest the ANCHOR layer's layout fields (IVF cap, fuzzy
+    *                radius); its watermark is the one derived from
+    *                `deltaPaths`. A layer whose manifest would be
+    *                all-default gets none ([[Bucketing.Manifest]]).
     * @param extraSwaps additional (view, physical) pairs to repoint AFTER
     *                the layer swaps — sibling views whose physical tables
     *                are suffix-named off a layer's generation (the BM25
@@ -78,41 +85,22 @@ object IndexLifecycle {
   def buildGeneration(spark: SparkSession,
                       layers: Seq[String],
                       write: Seq[String] => Unit,
-                      stampWatermark: Seq[String] => Unit = _ => (),
-                      preSwap: Seq[String] => Unit = _ => (),
+                      deltaPaths: Seq[String] = Nil,
+                      manifest: Bucketing.Manifest = Bucketing.Manifest(),
                       extraSwaps: Seq[String] => Seq[(String, String)] =
-                        _ => Nil): Unit =
-    buildGenerationWithServing(spark, layers,
-      write = (phys, _) => write(phys),
-      stampWatermark = (phys, _) => stampWatermark(phys),
-      preSwap = (phys, _) => preSwap(phys),
-      extraSwaps = extraSwaps)
-
-  /** [[buildGeneration]] whose callbacks ALSO receive the serving
-    * generations captured by invariant 2 (layer name → generation number
-    * live when this step resolved its source, 0 = none). Callers that
-    * INHERIT generation-scoped metadata from the replaced generation (the
-    * IVF cap) must read it off this map rather than re-reading the
-    * catalog themselves: a second `liveGeneration` read at the call site
-    * can diverge from the skeleton's capture if a concurrent fold swaps
-    * between the two — inherited metadata would then come from a
-    * different generation than the one this build retires against.
-    */
-  def buildGenerationWithServing(
-      spark: SparkSession,
-      layers: Seq[String],
-      write: (Seq[String], Map[String, Int]) => Unit,
-      stampWatermark: (Seq[String], Map[String, Int]) => Unit = (_, _) => (),
-      preSwap: (Seq[String], Map[String, Int]) => Unit = (_, _) => (),
-      extraSwaps: Seq[String] => Seq[(String, String)] = _ => Nil): Unit = {
+                        _ => Nil): Unit = {
     val b = Bucketing
     layers.foreach(b.requireSwapAdoptable(spark, _))
     val liveGens = layers.map(n => n -> b.liveGeneration(spark, n)).toMap
     val g = b.currentGenerations(spark, layers).values.max + 1
     val phys = layers.map(b.generationName(_, g))
-    write(phys, liveGens)
-    stampWatermark(phys, liveGens)
-    preSwap(phys, liveGens)
+    write(phys)
+    val folded = deltaPaths.map(b.maxBatchId(spark, _)).foldLeft(-1L)(math.max)
+    phys.zipWithIndex.foreach { case (p, i) =>
+      val m = (if (i == 0) manifest else b.Manifest())
+        .copy(foldedBatchMax = folded)
+      if (m != b.Manifest()) b.writeMeta(spark, p, m)
+    }
     phys.zip(layers).foreach { case (p, n) => b.swapView(spark, n, p) }
     extraSwaps(phys).foreach { case (v, p) => b.swapView(spark, v, p) }
     layers.foreach(n => b.retireBelow(spark, n, liveGens(n)))
@@ -203,8 +191,11 @@ object IndexLifecycle {
     } finally { survivors.unpersist(blocking = false); () }
   }
 
-  /** The ONE streaming maintenance-loop shape behind every family's
-    * `maintain*` surface (BM25, IVF, LSH, Jaccard, fuzzy): an Append-mode
+  /** The ONE streaming maintenance-loop shape behind all nine loops — the
+    * six index maintainers (LSH, Jaccard, substring dedup, fuzzy, IVF,
+    * BM25), the decontamination and blocklist gates and crawl ingest
+    * (`Dedup.gateSubstrDecontaminated`, `Curation.gateBlocklisted`,
+    * `Curation.maintainCrawlIngest`): an Append-mode
     * foreachBatch stream that applies the family's delta step per
     * micro-batch and, when `autoCompactAt > 0`, runs the family's
     * threshold-gated fold with `maxUnfolded = autoCompactAt − 1` (so a

@@ -1014,7 +1014,7 @@ class ExtSpec extends SparkSpec {
       // ranking corner actually executes (pure corpus text is all known)
       .withColumn("text", concat($"text", lit(" zznovel"), ($"doc_id" % 7).cast("string")))
     val tau = 800000L
-    Dedup.buildJaccardIndex(corpus, "jac_idx_test", tau, buckets = 4)
+    Dedup.buildJaccardIndexGen(corpus, "jac_idx_test", tau, buckets = 4)
     try {
       val viaIndex = Dedup.jaccardAgainstIndex(spark, batch, "jac_idx_test", tau)
         .select("doc_new", "doc_corpus", "n_common", "j_ppm")
@@ -1029,55 +1029,78 @@ class ExtSpec extends SparkSpec {
       assert(viaIndex == oneShot, s"index ${viaIndex.size} vs one-shot ${oneShot.size}")
       assert(viaIndex.nonEmpty) // the slice must actually exercise the join
     } finally Seq("jac_idx_test_vocab", "jac_idx_test_toks", "jac_idx_test_prefix")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach { t =>
+        spark.sql(s"DROP VIEW IF EXISTS $t")
+        graft.sources.Bucketing.dropGeneration(spark, t, 1)
+      }
   }
 
   test("jaccard index append: unseen-token docs match later twins, never stale prefixes") {
     // doc A is all build-unseen tokens: must survive (no candidates), then
-    // after append its twin B must be caught — proves the vocab EXTENSION
-    // (new tids above max) keeps appended prefixes consistent
+    // after its maintenance batch lands in the delta its twin B must be
+    // caught — proves the vocab EXTENSION (new tids above the visible max)
+    // keeps appended prefixes consistent, before and after the fold
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
     val tau = 900000L
-    Dedup.buildJaccardIndex(corpus, "jac_app_test", tau, buckets = 2)
+    val name = "jac_app_test"
+    val dir = managedTempDir("jacapp")
+    val deltaDir = s"$dir/delta"
+    Dedup.buildJaccardIndexGen(corpus, name, tau, buckets = 2)
+    def pairs(docs: org.apache.spark.sql.DataFrame, withDelta: Boolean) =
+      (if (withDelta) Dedup.jaccardAgainstIndexWith(spark, docs, name, deltaDir, tau)
+       else Dedup.jaccardAgainstIndex(spark, docs, name, tau))
+        .select("doc_new", "doc_corpus", "j_ppm")
+        .as[(Long, Long, Long)].collect().toSeq
     try {
       val a = Seq((10L, "qq ww ee rr tt")).toDF("doc_id", "text")
-      assert(Dedup.jaccardAgainstIndex(spark, a, "jac_app_test", tau).isEmpty)
-      Dedup.appendToJaccardIndex(spark, a, "jac_app_test", tau, buckets = 2)
+      assert(pairs(a, withDelta = true).isEmpty)
+      Dedup.processJaccardBatch(a, 0L, name, deltaDir, s"$dir/survivors", tau)
+      assert(spark.read.parquet(s"$dir/survivors").select("doc_id")
+        .as[Long].collect().toSeq == Seq(10L))
       val b = Seq((20L, "qq ww ee rr tt")).toDF("doc_id", "text")
-      val hits = Dedup.jaccardAgainstIndex(spark, b, "jac_app_test", tau)
-        .select("doc_new", "doc_corpus", "j_ppm")
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(hits == Seq((20L, 10L, 1000000L)), s"got $hits")
       // and a corpus twin still matches after the append (old prefixes live)
       val c = Seq((30L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-      val hc = Dedup.jaccardAgainstIndex(spark, c, "jac_app_test", tau)
-        .select("doc_new", "doc_corpus", "j_ppm")
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(hc == Seq((30L, 1L, 1000000L)), s"got $hc")
-    } finally Seq("jac_app_test_vocab", "jac_app_test_toks", "jac_app_test_prefix")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      assert(pairs(b, withDelta = true) == Seq((20L, 10L, 1000000L)))
+      assert(pairs(c, withDelta = true) == Seq((30L, 1L, 1000000L)))
+      // folded into generation 2, the base alone answers both
+      Dedup.compactJaccardIndexGen(spark, name, deltaDir, buckets = 2)
+      assert(pairs(b, withDelta = false) == Seq((20L, 10L, 1000000L)))
+      assert(pairs(c, withDelta = false) == Seq((30L, 1L, 1000000L)))
+    } finally JacSuffixes.foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS ${name}_$t")
+      Seq(1, 2).foreach(graft.sources.Bucketing.dropGeneration(spark, s"${name}_$t", _))
+    }
   }
 
   test("jaccard index bootstraps from an EMPTY corpus (append then probe)") {
     // the stream-everything-from-scratch path: nothing indexed at build
-    // time, so the first append must mint tids from 1 (max over an empty
-    // vocab is NULL, not 0)
+    // time, so the first maintenance batch must mint tids from 1 (max over
+    // an empty vocab is NULL, not 0)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    Dedup.buildJaccardIndex(empty, "jac_boot_test", 900000L, buckets = 2)
+    val name = "jac_boot_test"
+    val dir = managedTempDir("jacboot")
+    val deltaDir = s"$dir/delta"
+    Dedup.buildJaccardIndexGen(empty, name, 900000L, buckets = 2)
     try {
       val a = Seq((1L, "aa bb cc dd")).toDF("doc_id", "text")
-      assert(Dedup.jaccardAgainstIndex(spark, a, "jac_boot_test", 900000L).isEmpty)
-      Dedup.appendToJaccardIndex(spark, a, "jac_boot_test", 900000L, buckets = 2)
-      val hits = Dedup.jaccardAgainstIndex(spark,
-          Seq((2L, "aa bb cc dd")).toDF("doc_id", "text"), "jac_boot_test", 900000L)
+      assert(Dedup.jaccardAgainstIndexWith(spark, a, name, deltaDir, 900000L).isEmpty)
+      Dedup.processJaccardBatch(a, 0L, name, deltaDir, s"$dir/survivors", 900000L)
+      assert(spark.read.parquet(s"$deltaDir/vocab").select("tid")
+        .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+      val hits = Dedup.jaccardAgainstIndexWith(spark,
+          Seq((2L, "aa bb cc dd")).toDF("doc_id", "text"), name, deltaDir, 900000L)
         .select("doc_new", "doc_corpus", "j_ppm")
         .as[(Long, Long, Long)].collect().toSeq
       assert(hits == Seq((2L, 1L, 1000000L)), s"got $hits")
-    } finally Seq("jac_boot_test_vocab", "jac_boot_test_toks", "jac_boot_test_prefix")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally JacSuffixes.foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS ${name}_$t")
+      graft.sources.Bucketing.dropGeneration(spark, s"${name}_$t", 1)
+    }
   }
+
+  private val JacSuffixes = Seq("vocab", "toks", "prefix")
 
   test("dedup clustering: transitive chain collapses to one canonical id") {
     // a ~ b (drop 1 token) ~ c (drop 2 tokens): LSH links the chain even if
@@ -1234,24 +1257,60 @@ class ExtSpec extends SparkSpec {
     assert(own == 0)
   }
 
-  test("ivf base compaction re-stamps shard factors in place; answers unchanged") {
+  test("ivf generation fold re-stamps shard factors under a restated cap; answers unchanged") {
     CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(200)
-    // plain-lifecycle layout pass: uncapped build, then an in-place
-    // re-bucket with a cap — shard factors appear, the exchange-free scan
-    // survives, and no answer changes (assignments are stored, not
-    // recomputed)
-    Similarity.buildIvfIndex(e, "ivf_rebucket_test", buckets = 4)
+    val t = "ivf_rebucket_test"
+    val dir = managedTempDir("ivfrebucket")
+    // uncapped build, then a fold with nothing to fold and a RESTATED cap —
+    // the admin re-stamp workflow: shard factors appear, the cap lands in
+    // the new generation's manifest, the exchange-free scan survives, and
+    // no answer changes (assignments are stored, not recomputed)
+    Similarity.buildIvfIndexGen(e, t, buckets = 4)
     try {
-      val before = Similarity.searchIvfIndex(spark, "ivf_rebucket_test", 3)
+      val before = Similarity.searchIvfIndex(spark, t, 3)
         .as[(Long, Long, Long)].collect().toSet
-      Similarity.compactIvfIndex(spark, "ivf_rebucket_test", 4, maxBucket = 8)
-      spark.catalog.refreshTable("ivf_rebucket_test")
-      assert(spark.table("ivf_rebucket_test").filter(col("m") > 1).count() > 0)
-      val after = Similarity.searchIvfIndex(spark, "ivf_rebucket_test", 3)
+      Similarity.compactIvfIndexGen(spark, t, s"$dir/delta", 4, maxBucket = 8)
+      assert(spark.table(t).filter(col("m") > 1).count() > 0)
+      val b = graft.sources.Bucketing
+      assert(b.manifestOf(spark, b.resolvePhysical(spark, t)).maxBucket == 8)
+      val after = Similarity.searchIvfIndex(spark, t, 3)
       assert(!after.queryExecution.executedPlan.toString.contains("Exchange"))
       assert(after.as[(Long, Long, Long)].collect().toSet == before)
-    } finally spark.sql("DROP TABLE IF EXISTS ivf_rebucket_test")
+    } finally {
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      Seq(1, 2).foreach(graft.sources.Bucketing.dropGeneration(spark, t, _))
+    }
+  }
+
+  test("ivf generation fold launch shape: one manifest read per fold") {
+    CosineSimilarity.register(spark)
+    val e = Tables.embeddings(spark, sfDir).limit(200)
+    val t = "ivf_foldjobs_test"
+    val deltaDir = s"${managedTempDir("ivffoldjobs")}/delta"
+    // a CAPPED index with one unfolded batch: the fold inherits the cap
+    // and folds the batch — the maintenance loop's fold shape
+    Similarity.buildIvfIndexGen(e.filter(col("vec_id") < 150), t, buckets = 4,
+      maxBucket = 8)
+    Similarity.applyIvfDelta(e.filter(col("vec_id") >= 150), t, deltaDir, 0L)
+    try {
+      val sc = spark.sparkContext
+      val group = s"ivf-fold-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "one ivf generation fold")
+      try Similarity.compactIvfIndexGen(spark, t, deltaDir, 4,
+        maxBucket = Similarity.InheritMaxBucket)
+      finally sc.clearJobGroup()
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      // one single-row manifest job: the inherited cap and the folded
+      // watermark come off one read (two reads of the same row launched
+      // 10 jobs)
+      assert(jobs == 9, s"one ivf fold launched $jobs jobs")
+      assert(spark.table(t).count() == 200L)
+      assert(spark.table(t).filter(col("m") > 1).count() > 0)
+    } finally {
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      Seq(1, 2).foreach(graft.sources.Bucketing.dropGeneration(spark, t, _))
+    }
   }
 
   test("embedding near-dup finds every scaled copy pair") {
@@ -1770,7 +1829,7 @@ class ExtSpec extends SparkSpec {
 
   test("persisted LSH index: incremental probe matches one-shot candidates, index side unshuffled") {
     val docs = Tables.documents(spark, sfDir)
-    Dedup.buildLshIndex(docs, "lsh_idx_test", buckets = 4)
+    Dedup.buildLshIndexGen(docs, "lsh_idx_test", buckets = 4)
     try {
       val newHalf = Dedup.withPerturbedCopies(docs).filter(col("doc_id") >= 1000000L)
       val viaIndex = Dedup.dedupAgainstIndex(spark, newHalf, "lsh_idx_test")
@@ -1795,7 +1854,10 @@ class ExtSpec extends SparkSpec {
         assert("Exchange hashpartitioning".r.findAllIn(p).length == 2, p)
         assert(p.contains("lsh_idx_test"), p)
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
-    } finally spark.sql("DROP TABLE IF EXISTS lsh_idx_test")
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS lsh_idx_test")
+      graft.sources.Bucketing.dropGeneration(spark, "lsh_idx_test", 1)
+    }
   }
 
   test("generation-view LSH probe: physical generation table, index side unshuffled") {
@@ -2624,12 +2686,95 @@ class ExtSpec extends SparkSpec {
       val got = Fuzzy.fuzzyAgainstIndexWith(spark, queries, name, maxEdits = 2)
         .select("dict_term").as[String].collect().toSeq
       assert(got == Seq("alpha beta gamma"))
-    } finally {
-      Seq(name, s"${name}_cnt").foreach { t =>
-        spark.sql(s"DROP VIEW IF EXISTS $t")
-        graft.sources.Bucketing.dropGeneration(spark, t, 1)
-      }
-      graft.sources.Bucketing.dropWithLocation(spark, s"${name}_radius")
+      // the radius travels with every fold: the folded keys generation's
+      // manifest is the source's with only the watermark replaced
+      val deltaDir = s"${managedTempDir("fuzzyradius")}/d"
+      Fuzzy.appendFuzzyBatch(Seq((3L, "alpha beta gamma tail three"))
+        .toDF("doc_id", "text"), deltaDir, 0L, maxEdits = 2)
+      Fuzzy.compactFuzzyIndexGen(spark, name, deltaDir, buckets = 2)
+      val b = graft.sources.Bucketing
+      assert(b.manifestOf(spark, b.resolvePhysical(spark, name)) ==
+        b.Manifest(foldedBatchMax = 0L, maxEdits = 2))
+      assert(Fuzzy.fuzzyAgainstIndexWith(spark, queries, name, maxEdits = 2)
+        .select("dict_term").as[String].collect().toSeq == got)
+    } finally Seq(name, s"${name}_cnt").foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      Seq(1, 2).foreach(graft.sources.Bucketing.dropGeneration(spark, t, _))
+    }
+  }
+
+  /** Asserts that a probe, a maintenance-loop append and a fold of fuzzy
+    * index `name` each fail with a rebuild instruction naming `why`, and
+    * that the failed append wrote nothing.
+    */
+  private def assertFuzzyRefused(name: String, why: String): Unit = {
+    import org.apache.spark.sql.types._
+    val root = managedTempDir("fuzzyrefused")
+    def refused(e: Throwable): Unit = {
+      val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(why) && m.contains("rebuild")),
+        msgs.mkString(" | "))
+    }
+    refused(intercept[IllegalArgumentException](Fuzzy.fuzzyAgainstIndexWith(
+      spark, Seq((900L, "alpha beta gamqa")).toDF("doc_id", "q_term"), name)))
+    Seq((10L, "stream only shingle first pad")).toDF("doc_id", "text")
+      .write.parquet(s"$root/src")
+    val q = Fuzzy.maintainFuzzyDictionary(
+      spark.readStream.schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType))))
+        .parquet(s"$root/src"),
+      name, s"$root/delta", s"$root/ckpt")
+    try refused(intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.processAllAvailable()))
+    finally q.stop()
+    assert(!new java.io.File(s"$root/delta").exists())
+    refused(intercept[IllegalArgumentException](
+      Fuzzy.compactFuzzyIndexGen(spark, name, s"$root/delta", buckets = 2)))
+  }
+
+  test("fuzzy index without a persisted radius fails loudly at probe, append and fold") {
+    // the two older on-disk shapes: a keys manifest without the radius
+    // column (the radius then lived in a separate sibling table) and no
+    // keys manifest at all. Guessing radius 1 would let a maintenance
+    // loop append d1 keys to a d2 index — every streamed term silently
+    // unreachable at the probe radius
+    val b = graft.sources.Bucketing
+    val name = "graft_fuzzy_noradius_t"
+    Fuzzy.buildFuzzyIndexGen(
+      Seq((1L, "alpha beta gamma tail one"),
+        (2L, "alpha beta gamma tail two")).toDF("doc_id", "text"),
+      name, buckets = 2, maxEdits = 2)
+    try {
+      val meta = s"${b.resolvePhysical(spark, name)}_meta"
+      b.dropWithLocation(spark, meta)
+      Seq((-1L, 0)).toDF("folded_batch_max", "max_bucket").write.saveAsTable(meta)
+      assertFuzzyRefused(name, "no edit radius")
+      b.dropWithLocation(spark, meta)
+      assertFuzzyRefused(name, "no edit radius")
+    } finally Seq(name, s"${name}_cnt").foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      b.dropGeneration(spark, t, 1)
+    }
+  }
+
+  test("fuzzy index with string keys fails loudly at probe, append and fold") {
+    // a generation in the pre-hash key encoding: the delete-neighborhood
+    // strings themselves. Hashed probe keys would join it to nothing and
+    // silently drop the whole base dictionary
+    val b = graft.sources.Bucketing
+    val name = "graft_fuzzy_strkey_t"
+    val (keys, cnt) = (b.generationName(name, 1), b.generationName(s"${name}_cnt", 1))
+    b.writeBucketed(Seq(("alpha beta gamma", "alpha beta gamma"))
+      .toDF("k", "term"), keys, "k", 2)
+    b.writeBucketed(Seq(("alpha beta gamma", 2L)).toDF("term", "cnt"), cnt, "term", 2)
+    b.writeMeta(spark, keys, b.Manifest(maxEdits = 1))
+    b.swapView(spark, name, keys)
+    b.swapView(spark, s"${name}_cnt", cnt)
+    try assertFuzzyRefused(name, "xxhash64")
+    finally Seq(name, s"${name}_cnt").foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      b.dropGeneration(spark, t, 1)
     }
   }
 
@@ -2664,12 +2809,9 @@ class ExtSpec extends SparkSpec {
           Some(s"$root/delta"), maxEdits = 2)
         .select("dict_term", "dist").as[(String, Long)].collect().toSeq
       assert(got == Seq(("stream only shingle", 2L)))
-    } finally {
-      Seq(name, s"${name}_cnt").foreach { t =>
-        spark.sql(s"DROP VIEW IF EXISTS $t")
-        graft.sources.Bucketing.dropGeneration(spark, t, 1)
-      }
-      graft.sources.Bucketing.dropWithLocation(spark, s"${name}_radius")
+    } finally Seq(name, s"${name}_cnt").foreach { t =>
+      spark.sql(s"DROP VIEW IF EXISTS $t")
+      graft.sources.Bucketing.dropGeneration(spark, t, 1)
     }
   }
 

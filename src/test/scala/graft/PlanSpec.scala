@@ -99,7 +99,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("vocabulary rank is range-partitioned, never a single-partition window") {
-    // the dictionary-encode step of jaccardJoin/buildJaccardIndex ranks the
+    // the dictionary-encode step of jaccardJoin/buildJaccardIndexGen ranks the
     // DISTINCT-TOKEN table; at web scale that is 10⁸–10⁹ rows, so an
     // unpartitioned row_number window (Exchange SinglePartition) is a
     // straggler/OOM. Ranks.globalRank must range-partition the sort instead
@@ -147,7 +147,7 @@ class PlanSpec extends SparkSpec {
 
   test("jaccard index probe: both index tables read co-located, zero index-side shuffles") {
     val docs = Tables.documents(spark, sfDir)
-    Dedup.buildJaccardIndex(docs.filter(col("doc_id") % 2 === 0), "jac_plan_test",
+    Dedup.buildJaccardIndexGen(docs.filter(col("doc_id") % 2 === 0), "jac_plan_test",
       850000L, buckets = 4)
     val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -170,7 +170,10 @@ class PlanSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
       Seq("jac_plan_test_vocab", "jac_plan_test_toks", "jac_plan_test_prefix")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        .foreach { t =>
+          spark.sql(s"DROP VIEW IF EXISTS $t")
+          graft.sources.Bucketing.dropGeneration(spark, t, 1)
+        }
     }
   }
 

@@ -503,10 +503,8 @@ class RecoverySpec extends SparkSpec {
     val root = managedTempDir("lshreplay")
     val outDir = s"$root/survivors"
     val deltaDir = s"$root/delta"
-    // plain (non-generation) build: the delta loop serves both layouts —
-    // a plain table resolves to itself with watermark −1
     val base = Tables.documents(spark, sfDir).select("doc_id", "text").limit(10)
-    Dedup.buildLshIndex(base, "lsh_replay_test", buckets = 4)
+    Dedup.buildLshIndexGen(base, "lsh_replay_test", buckets = 4)
     try {
       val fresh = "zqx wvu tsr qpo nml kji hgf edc ba nine eight seven"
       val batch = base.filter(col("doc_id") === 0L)
@@ -525,7 +523,10 @@ class RecoverySpec extends SparkSpec {
         "band rows written exactly once across replays")
       spark.catalog.refreshTable("lsh_replay_test")
       assert(spark.table("lsh_replay_test").count() == before)
-    } finally spark.sql("DROP TABLE IF EXISTS lsh_replay_test")
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS lsh_replay_test")
+      graft.sources.Bucketing.dropGeneration(spark, "lsh_replay_test", 1)
+    }
   }
 
   test("jaccard dedup batch REPLAY is idempotent (no dup index rows, no self-drop)") {
@@ -536,7 +537,7 @@ class RecoverySpec extends SparkSpec {
     val tau = 900000L
     val base = Seq((0L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    Dedup.buildJaccardIndex(base, "jac_replay_test", tau, buckets = 2)
+    Dedup.buildJaccardIndexGen(base, "jac_replay_test", tau, buckets = 2)
     try {
       val batch = Seq(
         (100L, "alpha beta gamma delta epsilon"), // twin of corpus -> drop
@@ -566,7 +567,10 @@ class RecoverySpec extends SparkSpec {
         .groupBy("token").count().filter($"count" > 1).count()
       assert(vocabDups == 0L, "duplicate vocab tokens after replay")
     } finally Seq("jac_replay_test_vocab", "jac_replay_test_toks", "jac_replay_test_prefix")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach { t =>
+        spark.sql(s"DROP VIEW IF EXISTS $t")
+        graft.sources.Bucketing.dropGeneration(spark, t, 1)
+      }
   }
 
   test("jaccard dedup batch REPLAY keeps within-batch twins (both-survive contract)") {
@@ -577,7 +581,7 @@ class RecoverySpec extends SparkSpec {
     val tau = 900000L
     val base = Seq((0L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    Dedup.buildJaccardIndex(base, "jac_twin_test", tau, buckets = 2)
+    Dedup.buildJaccardIndexGen(base, "jac_twin_test", tau, buckets = 2)
     try {
       // two within-batch twins that match NOTHING in the index: both survive
       // the first delivery (documented contract), and must STILL both
@@ -600,7 +604,10 @@ class RecoverySpec extends SparkSpec {
         .groupBy("doc_id").count().filter($"count" > 1).count()
       assert(dups == 0L, "duplicate toks rows after twin replay")
     } finally Seq("jac_twin_test_vocab", "jac_twin_test_toks", "jac_twin_test_prefix")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach { t =>
+        spark.sql(s"DROP VIEW IF EXISTS $t")
+        graft.sources.Bucketing.dropGeneration(spark, t, 1)
+      }
   }
 
   test("lsh dedup batch REPLAY keeps within-batch twins (both-survive contract)") {
@@ -609,7 +616,7 @@ class RecoverySpec extends SparkSpec {
     val outDir = s"$root/survivors"
     val deltaDir = s"$root/delta"
     val base = Tables.documents(spark, sfDir).select("doc_id", "text").limit(10)
-    Dedup.buildLshIndex(base, "lsh_twin_test", buckets = 4)
+    Dedup.buildLshIndexGen(base, "lsh_twin_test", buckets = 4)
     try {
       val fresh = "zqx wvu tsr qpo nml kji hgf edc ba nine eight seven"
       val batch = Seq((1000L, fresh), (2000L, fresh)).toDF("doc_id", "text")
@@ -623,7 +630,10 @@ class RecoverySpec extends SparkSpec {
           "lsh_twin_test", Some(s"$deltaDir/bands"), Seq("bkey", "doc_id"))
         .groupBy("doc_id", "bkey").count().filter($"count" > 1).count()
       assert(bandDups == 0L, "duplicate band rows after twin replay")
-    } finally spark.sql("DROP TABLE IF EXISTS lsh_twin_test")
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS lsh_twin_test")
+      graft.sources.Bucketing.dropGeneration(spark, "lsh_twin_test", 1)
+    }
   }
 
   test("streaming sequence packing: per-source offsets survive restart") {
@@ -1318,8 +1328,8 @@ class RecoverySpec extends SparkSpec {
       // generation's manifest re-persists it for the next fold
       assert(spark.table("ivf_auto_test").count() == 200L)
       assert(spark.table("ivf_auto_test").filter(col("m") > 1).count() > 0)
-      assert(Bucketing.maxBucketOf(spark,
-        Bucketing.resolvePhysical(spark, "ivf_auto_test"), -99) == 8)
+      assert(Bucketing.manifestOf(spark,
+        Bucketing.resolvePhysical(spark, "ivf_auto_test")).maxBucket == 8)
       // base-only search is exchange-free and answers like a from-scratch
       // direct search over the full corpus (same first-16 quantizer)
       val got = Similarity.searchIvfIndex(spark, "ivf_auto_test", 3)
@@ -1354,7 +1364,7 @@ class RecoverySpec extends SparkSpec {
       Similarity.compactIvfIndexGen(spark, t, deltaDir, buckets = 4,
         maxBucket = Similarity.InheritMaxBucket)
       val afterFold = Bucketing.resolvePhysical(spark, t)
-      assert(Bucketing.maxBucketOf(spark, afterFold, -99) == 64)
+      assert(Bucketing.manifestOf(spark, afterFold).maxBucket == 64)
       // an admin cap CHANGE over that state must NOT be swallowed by the
       // GC-only shortcut: the full path re-stamps shard factors under the
       // new cap and persists it
@@ -1362,7 +1372,7 @@ class RecoverySpec extends SparkSpec {
         maxBucket = 8)
       val afterRecap = Bucketing.resolvePhysical(spark, t)
       assert(afterRecap != afterFold)
-      assert(Bucketing.maxBucketOf(spark, afterRecap, -99) == 8)
+      assert(Bucketing.manifestOf(spark, afterRecap).maxBucket == 8)
       assert(spark.table(t).filter(col("m") > 1).count() > 0)
       assert(spark.table(t).count() == 140L)
       // recreate the grace state (a folded-but-retained delta): one more
@@ -1373,7 +1383,7 @@ class RecoverySpec extends SparkSpec {
       Similarity.compactIvfIndexGen(spark, t, deltaDir, buckets = 4,
         maxBucket = Similarity.InheritMaxBucket)
       val afterFold2 = Bucketing.resolvePhysical(spark, t)
-      assert(Bucketing.maxBucketOf(spark, afterFold2, -99) == 8)
+      assert(Bucketing.manifestOf(spark, afterFold2).maxBucket == 8)
       assert(spark.table(t).count() == 150L)
       // and with the cap UNCHANGED (inherit) over the grace-retained
       // delta, the cycle stays GC-only: no new generation is written
@@ -1393,12 +1403,13 @@ class RecoverySpec extends SparkSpec {
     val base = (0L until 40L).map(i =>
       (i, Array.tabulate(8)(d => (i * 8 + d).toFloat))).toDF("vec_id", "embedding")
     // InheritMaxBucket on a FRESH build has nothing to inherit: uncapped,
-    // and no manifest row carrying a negative "cap"
+    // and no manifest row carrying a negative "cap" — no manifest at all
     Similarity.buildIvfIndexGen(base, t, buckets = 2,
       maxBucket = Similarity.InheritMaxBucket)
     try {
       val phys = Bucketing.resolvePhysical(spark, t)
-      assert(Bucketing.maxBucketOf(spark, phys, -99) == -99)
+      assert(!spark.catalog.tableExists(s"${phys}_meta"))
+      assert(Bucketing.manifestOf(spark, phys) == Bucketing.Manifest())
       assert(spark.table(t).filter(col("m") =!= 1).count() == 0L)
     } finally {
       spark.sql(s"DROP VIEW IF EXISTS $t")

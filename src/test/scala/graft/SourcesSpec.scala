@@ -235,21 +235,31 @@ class SourcesSpec extends SparkSpec {
   test("manifest cap persistence: capped writes read back; pre-cap manifests default") {
     import graft.sources.Bucketing
     import spark.implicits._
-    // new-form manifest: folded watermark plus the persisted hot-bucket cap
-    Bucketing.writeMeta(spark, "meta_evo_new", 7L, maxBucket = 16)
+    // current manifest: folded watermark, hot-bucket cap, fuzzy radius
+    Bucketing.writeMeta(spark, "meta_evo_new",
+      Bucketing.Manifest(7L, maxBucket = 16, maxEdits = 2))
+    // PRE-RADIUS manifest (folded_batch_max + max_bucket) — every
+    // generation written before the radius joined the manifest
+    Seq((6L, 8)).toDF("folded_batch_max", "max_bucket")
+      .write.saveAsTable("meta_evo_cap_meta")
     // PRE-CAP manifest (folded_batch_max only) — the shape of every
     // generation written before cap persistence existed; readers must
     // take the default, not throw on the missing column
     Seq(5L).toDF("folded_batch_max").write.saveAsTable("meta_evo_old_meta")
     try {
-      assert(Bucketing.foldedBatchMaxOf(spark, "meta_evo_new") == 7L)
-      assert(Bucketing.maxBucketOf(spark, "meta_evo_new", -99) == 16)
-      assert(Bucketing.foldedBatchMaxOf(spark, "meta_evo_old") == 5L)
-      assert(Bucketing.maxBucketOf(spark, "meta_evo_old", 0) == 0)
-      // absent manifest: both readers fall back (−1 / default)
-      assert(Bucketing.foldedBatchMaxOf(spark, "meta_evo_none") == -1L)
-      assert(Bucketing.maxBucketOf(spark, "meta_evo_none", 3) == 3)
-    } finally Seq("meta_evo_new_meta", "meta_evo_old_meta")
+      assert(Bucketing.manifestOf(spark, "meta_evo_new") ==
+        Bucketing.Manifest(7L, 16, 2))
+      // older layouts read their missing columns' defaults: uncapped,
+      // no radius recorded (the fuzzy family refuses those; every other
+      // family never reads the radius)
+      assert(Bucketing.manifestOf(spark, "meta_evo_cap") ==
+        Bucketing.Manifest(6L, 8, 0))
+      assert(Bucketing.manifestOf(spark, "meta_evo_old") ==
+        Bucketing.Manifest(5L, 0, 0))
+      // absent manifest: every field falls back (−1 / uncapped / none)
+      assert(Bucketing.manifestOf(spark, "meta_evo_none") ==
+        Bucketing.Manifest(-1L, 0, 0))
+    } finally Seq("meta_evo_new_meta", "meta_evo_cap_meta", "meta_evo_old_meta")
       .foreach(t => Bucketing.dropWithLocation(spark, t))
   }
 
