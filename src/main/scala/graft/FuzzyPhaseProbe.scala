@@ -117,7 +117,7 @@ object FuzzyPhaseProbe {
       t("build") { graft.ext.Fuzzy.buildFuzzyIndexGen(
         buildDocs, "graft_fuzzy_idx_p") }
       t("append") { graft.ext.Fuzzy.appendFuzzyBatch(
-        all.filter(col("doc_id") % 3 === 0), dir, 1L) }
+        all.filter(col("doc_id") % 3 === 0), dir, 1L, maxEdits = 1) }
       t("probe") { graft.ext.Fuzzy.fuzzyAgainstIndexWith(
         spark, graft.ext.Fuzzy.typoQueries(all), "graft_fuzzy_idx_p",
         Some(dir)).orderBy("doc_id", "dict_term").count() }

@@ -87,7 +87,7 @@ object FuzzyScaleProbe {
         val dd = s"$tmp/fuzzy_x$s"
         val base = pairedDocs(2000L * s, 0L, "b")
         Fuzzy.buildFuzzyIndexGen(base, name)
-        Fuzzy.appendFuzzyBatch(deltaDocs, dd, 0L)
+        Fuzzy.appendFuzzyBatch(deltaDocs, dd, 0L, maxEdits = 1)
         val q = probeQ.unionByName(typo(deltaDocs)).localCheckpoint(true)
         // the delta must actually answer — an empty delta fakes flatness
         val deltaHits = Fuzzy

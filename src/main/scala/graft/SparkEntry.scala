@@ -481,7 +481,8 @@ object SparkEntry {
           .createTempDirectory("graft_fuzzy_delta").toString
         Fuzzy.buildFuzzyIndexGen(all.filter(col("doc_id") % 3 =!= 0),
           "graft_fuzzy_idx_q")
-        Fuzzy.appendFuzzyBatch(all.filter(col("doc_id") % 3 === 0), dir, 1L)
+        Fuzzy.appendFuzzyBatch(all.filter(col("doc_id") % 3 === 0), dir, 1L,
+          maxEdits = 1)
         dir
       }
       Fuzzy.fuzzyAgainstIndexWith(s, Fuzzy.typoQueries(all),

@@ -411,9 +411,14 @@ object Fuzzy {
     * `{deltaDir}/cnt`) under its own batch_id partition. Stateless —
     * see the lifecycle note — so redelivery is idempotent by the
     * dynamic-partition overwrite alone.
+    *
+    * `maxEdits` must be the index's build radius; it has no default, so
+    * no caller can append d1 keys to a d2 index by omission. The public
+    * path is [[maintainFuzzyDictionary]], which reads the radius off the
+    * index manifest.
     */
-  def appendFuzzyBatch(batchDocs: DataFrame, deltaDir: String,
-                       batchId: Long, maxEdits: Int = 1): Unit = {
+  private[graft] def appendFuzzyBatch(batchDocs: DataFrame, deltaDir: String,
+                                      batchId: Long, maxEdits: Int): Unit = {
     val b = graft.sources.Bucketing
     // one shingle aggregation per batch, shared by both partition writes
     val cnt = layerCounts(batchDocs).persist()

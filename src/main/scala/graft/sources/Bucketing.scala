@@ -547,8 +547,13 @@ object Bucketing {
     * bounded per-probe cost against compaction's base-rewrite cost.
     */
   def unfoldedBatchCount(spark: SparkSession, table: String,
-                         deltaPath: String): Int = {
-    val folded = foldedBatchMax(spark, table)
+                         deltaPath: String): Int =
+    batchesAbove(spark, deltaPath, foldedBatchMax(spark, table))
+
+  /** [[unfoldedBatchCount]] against a watermark the caller already read:
+    * the directory listing alone, no manifest job. */
+  private[graft] def batchesAbove(spark: SparkSession, deltaPath: String,
+                                  folded: Long): Int = {
     val p = new org.apache.hadoop.fs.Path(deltaPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0

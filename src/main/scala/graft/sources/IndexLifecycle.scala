@@ -129,9 +129,9 @@ object IndexLifecycle {
                       pressureDelta: String, maxUnfolded: Int,
                       buckets: Int, compact: Int => Unit): Boolean = {
     val b = Bucketing
-    if (b.unfoldedBatchCount(spark, pressureLayer, pressureDelta)
-        > maxUnfolded) {
-      val before = b.foldedBatchMax(spark, pressureLayer)
+    // one manifest read: the gate and the advance check share the watermark
+    val before = b.foldedBatchMax(spark, pressureLayer)
+    if (b.batchesAbove(spark, pressureDelta, before) > maxUnfolded) {
       val useBuckets = if (buckets > 0) buckets
         else b.inheritedBucketCount(spark, pressureLayer)
       compact(useBuckets)

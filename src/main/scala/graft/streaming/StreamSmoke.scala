@@ -7,7 +7,10 @@ import graft.Tables
 
 /** Runnable smoke of the full streaming topology: replays the sf events
   * table through a file source, fans out to every named store, processes to
-  * completion, and prints one line per store with its converged row count.
+  * completion, and prints one line per store with its converged row count
+  * and its state layout from the last trigger's progress: state partitions
+  * (`numShufflePartitions`), state-store instances and state rows per
+  * stateful operator (`-` for a stateless store).
   *
   * Usage: `sbt "runMain graft.streaming.StreamSmoke [sfDir]"`
   */
@@ -34,7 +37,14 @@ object StreamSmoke {
     queries.values.foreach(_.processAllAvailable())
     queries.values.foreach(_.stop())
     stores.keys.toSeq.sorted.foreach { name =>
-      println(s"[stream-smoke] $name rows=${spark.table(name).count()}")
+      // the state layout of the last trigger, from the query's own progress
+      val ops = Option(queries(name).lastProgress).toSeq.flatMap(_.stateOperators)
+      def each(f: org.apache.spark.sql.streaming.StateOperatorProgress => Long) =
+        if (ops.isEmpty) "-" else ops.map(f).mkString(",")
+      println(s"[stream-smoke] $name rows=${spark.table(name).count()}" +
+        s" numShufflePartitions=${each(_.numShufflePartitions)}" +
+        s" numStateStoreInstances=${each(_.numStateStoreInstances)}" +
+        s" numRowsTotal=${each(_.numRowsTotal)}")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -43,28 +43,72 @@ object Topology {
   private def withOptionalWatermark(df: DataFrame, watermark: Option[String]): DataFrame =
     watermark.fold(df)(w => df.withWatermark("ts", w))
 
+  /** User keys one state partition is sized for. At this many keys per
+    * partition a trigger's state work on one partition still costs less
+    * than the per-partition commit overhead of splitting it (the state
+    * ladder in SCALE.md, "Measured evidence: streaming state partitions
+    * per store").
+    */
+  val UsersPerStatePartition: Long = 500000L
+
+  /** State partitions for a store whose key space holds `keys` keys:
+    * `min(shufflePartitions, ceil(keys / UsersPerStatePartition))`, and at
+    * least one.
+    */
+  def statePartitions(keys: Long, shufflePartitions: Int): Int = {
+    val wanted = (math.max(keys, 1L) + UsersPerStatePartition - 1) /
+      UsersPerStatePartition
+    math.min(shufflePartitions.toLong, wanted).toInt.max(1)
+  }
+
+  /** State partitions of each frame [[stores]] built, read by
+    * [[startSized]]. Weak keys: a frame nobody starts is not pinned here.
+    * Frames are compared by identity (Dataset keeps Object equality).
+    */
+  private val sizedFrames = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Integer]())
+
+  /** Rows of `dim`, from plan statistics when they carry a row count (a
+    * materialised cache does), else one count job.
+    */
+  private def rowCount(dim: DataFrame): Long =
+    dim.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
+      .getOrElse(dim.count())
+
   /** The aggregation fan-out: store name -> streaming DataFrame, mirroring
     * the reference's named state stores (SURVEY §1.1).
+    *
+    * Each stateful store's state-partition count is fixed here and applied
+    * when it starts ([[startMemorySink]]). `store_log_event_counts`
+    * (`event_type`) and `store_daily_log_events` (day × role × type) are
+    * keyed by bounded domains and get 1. The user-keyed stores and
+    * `store_deduped_events` get [[statePartitions]] of `userDim`'s row
+    * count, which bounds the user key space; `userDim` is read once per
+    * call. The session's `spark.sql.shuffle.partitions` caps the count.
     */
   def stores(events: DataFrame, userDim: DataFrame,
              watermark: Option[String] = None): Map[String, DataFrame] = {
     val main = Ingest.mainBranch(events)
     val wm = withOptionalWatermark(main, watermark)
-    Map(
-      "store_anonymous_events" -> Ingest.anonymousBranch(events),
-      "store_user_data" -> Enrich.latestUserStreaming(main),
+    val cap = events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val userSized = statePartitions(rowCount(userDim), cap)
+    val sized = Seq(
       // a watermark cannot evict a plain agg's keyed state (no window in the
       // key), so the bounded form swaps in a per-key fold with event-time TTL
-      "store_user_last_seen" -> watermark.fold(Stats.lastSeenPerType(main))(
-        w => Stats.lastSeenPerTypeTtl(main, w)),
-      "store_log_event_counts" -> Stats.eventTypeCounts(main),
-      "store_daily_log_events" -> Stats.dailyRoleCounts(wm, userDim),
-      "store_user_streaks" -> Streaks.sessions(wm),
-      "store_question_attempts" -> Questions.partRollup(main),
-      "store_user_achievements" -> Achievements.answerCounts(main),
+      ("store_user_data", Enrich.latestUserStreaming(main), userSized),
+      ("store_user_last_seen", watermark.fold(Stats.lastSeenPerType(main))(
+        w => Stats.lastSeenPerTypeTtl(main, w)), userSized),
+      ("store_log_event_counts", Stats.eventTypeCounts(main), 1),
+      ("store_daily_log_events", Stats.dailyRoleCounts(wm, userDim), 1),
+      ("store_user_streaks", Streaks.sessions(wm), userSized),
+      ("store_question_attempts", Questions.partRollup(main), userSized),
+      ("store_user_achievements", Achievements.answerCounts(main), userSized),
       // extension store: streaming exact dedup (state bounded by watermark)
-      "store_deduped_events" -> graft.ext.Dedup.exactDedupRecords(
-        main, watermark.getOrElse("10 minutes")))
+      ("store_deduped_events", graft.ext.Dedup.exactDedupRecords(
+        main, watermark.getOrElse("10 minutes")), userSized))
+    sized.foreach { case (_, df, n) => sizedFrames.put(df, n) }
+    sized.map { case (name, df, _) => name -> df }.toMap +
+      ("store_anonymous_events" -> Ingest.anonymousBranch(events))
   }
 
   /** The behavior-analytics fan-out — the round-17/18 streaming twins
@@ -108,9 +152,6 @@ object Topology {
         Stats.funnelStreamingTtl(spark, events, ttl))
   }
 
-  /** Start one store as an in-memory Update-mode sink (smoke/test harness);
-    * production would swap format("memory") for the real sink per store.
-    */
   /** Output mode for a store: session-window aggregations only support
     * Append (sessions emit once, when the watermark closes them). A
     * WATERMARKED time-window aggregation FOLLOWED BY A ROW GENERATOR
@@ -179,26 +220,57 @@ object Topology {
     else OutputMode.Append()
   }
 
+  /** Start one store as an in-memory sink in its [[outputModeFor]] mode
+    * (smoke/test harness); production would swap format("memory") for the
+    * real sink per store.
+    *
+    * A frame built by [[stores]] starts with the state-partition count
+    * [[stores]] fixed for it: 1 for the bounded-domain stores, and
+    * `min(spark.sql.shuffle.partitions, ceil(userDim rows /
+    * UsersPerStatePartition))` for the user-keyed ones — 1 at every data
+    * size in this repository. Any other frame starts with the session's
+    * `spark.sql.shuffle.partitions`.
+    */
   def startMemorySink(df: DataFrame, name: String,
-                      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val mode = outputModeFor(df)
-    df.writeStream
-      .outputMode(mode)
+                      trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
+    startSized(df)(_.outputMode(outputModeFor(df))
       .format("memory")
       .queryName(name)
-      .trigger(trigger)
-      .start()
-  }
+      .trigger(trigger))
 
   /** foreachBatch sink for the achievements path (S6): batch-mode JDBC/
     * parquet write per micro-batch, the Spark analog of the reference's
-    * per-record Postgres processor.
+    * per-record Postgres processor. Sized like [[startMemorySink]].
     */
   def startAchievementsSink(df: DataFrame, path: String): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Update())
+    startSized(df)(_.outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         Achievements.sinkToParquet(batch.sparkSession, batch, path, batchId)
+      })
+
+  /** The one start path. For a frame built by [[stores]], sets the
+    * session's `spark.sql.shuffle.partitions` to the store's recorded count
+    * for the duration of `start()` and restores it after. The query clones
+    * the session when it is constructed, inside `start()`, and its offset
+    * log pins the count from batch 0, so a restart from the same checkpoint
+    * keeps the count even if the session value has changed since.
+    *
+    * Starts are serialised on `Topology`, so two stores never see each
+    * other's count. A query that is not started here but plans at the same
+    * moment on the same session could see the temporary value.
+    */
+  private[graft] def startSized(df: DataFrame)(
+      configure: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val writer = configure(df.writeStream)
+    Option(sizedFrames.get(df)).fold(writer.start()) { n =>
+      val conf = df.sparkSession.conf
+      val key = "spark.sql.shuffle.partitions"
+      synchronized {
+        val prev = conf.getOption(key)
+        conf.set(key, n.toString)
+        try writer.start()
+        finally prev.fold(conf.unset(key))(conf.set(key, _))
       }
-      .start()
+    }
+  }
 }

@@ -2630,7 +2630,7 @@ class ExtSpec extends SparkSpec {
     val name = "graft_fuzzy_cross_t"
     val dir = TestSpark.managedTempDir("fuzzycross")
     Fuzzy.buildFuzzyIndexGen(base, name)
-    Fuzzy.appendFuzzyBatch(delta, s"$dir/d", 0L)
+    Fuzzy.appendFuzzyBatch(delta, s"$dir/d", 0L, maxEdits = 1)
     val queries = Seq(
       (900L, "rare term herq"),   // 1 edit from the cross-layer shingle
       (901L, "plus base pxd"))    // 1 edit from a base-only (count 1) shingle
@@ -2820,7 +2820,8 @@ class ExtSpec extends SparkSpec {
     val name = "graft_fuzzy_diff_t"
     val dir = TestSpark.managedTempDir("fuzzydiff")
     Fuzzy.buildFuzzyIndexGen(docs.filter(col("doc_id") % 4 =!= 0), name)
-    Fuzzy.appendFuzzyBatch(docs.filter(col("doc_id") % 4 === 0), s"$dir/d", 0L)
+    Fuzzy.appendFuzzyBatch(docs.filter(col("doc_id") % 4 === 0), s"$dir/d", 0L,
+      maxEdits = 1)
     val q = Fuzzy.typoQueries(docs)
     val inc = Fuzzy.fuzzyAgainstIndexWith(spark, q, name, Some(s"$dir/d"))
       .select("doc_id", "dict_term").as[(Long, String)].collect().toSet
@@ -2840,7 +2841,7 @@ class ExtSpec extends SparkSpec {
     val dir = TestSpark.managedTempDir("fuzzyrebuild")
     val deltaDir = s"$dir/d"
     Fuzzy.buildFuzzyIndexGen(base, name, buckets = 2)
-    Fuzzy.appendFuzzyBatch(deltaDocs, deltaDir, 0L)
+    Fuzzy.appendFuzzyBatch(deltaDocs, deltaDir, 0L, maxEdits = 1)
     val queries = Seq((900L, "delta only shingqe"),
       (901L, "alpha beta gamqa")).toDF("doc_id", "q_term")
     def probe(): Set[(Long, String)] = Fuzzy
@@ -2866,7 +2867,8 @@ class ExtSpec extends SparkSpec {
     Fuzzy.buildFuzzyIndexGen(base, name, buckets = 2)
     Fuzzy.appendFuzzyBatch(
       Seq((10L, "gamma pad extra one x"),
-        (11L, "gamma pad extra one y")).toDF("doc_id", "text"), deltaDir, 0L)
+        (11L, "gamma pad extra one y")).toDF("doc_id", "text"), deltaDir, 0L,
+      maxEdits = 1)
     val queries = Seq((900L, "alpha beta gamqa"),
       (901L, "gamma pad extrq")).toDF("doc_id", "q_term")
     def probe(): Set[(Long, String)] = Fuzzy

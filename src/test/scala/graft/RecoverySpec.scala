@@ -1617,7 +1617,7 @@ class RecoverySpec extends SparkSpec {
     val root = managedTempDir("fuzzygenswap")
     val deltaDir = s"$root/delta"
     Fuzzy.buildFuzzyIndexGen(base, name, buckets = 2)
-    Fuzzy.appendFuzzyBatch(delta, deltaDir, 0L)
+    Fuzzy.appendFuzzyBatch(delta, deltaDir, 0L, maxEdits = 1)
     val queries = Seq(
       (900L, "alpha beta gamqa"),   // base-admitted shingle
       (901L, "delta pad tqk"),      // delta-admitted shingle
@@ -1773,7 +1773,7 @@ class RecoverySpec extends SparkSpec {
         Fam("fuzzy", t, s"$d/cnt",
           () => Fuzzy.buildFuzzyIndexGen(fuzDocs, t, buckets = 2),
           i => Fuzzy.appendFuzzyBatch(fuzB(i.toInt).toDF("doc_id", "text"),
-            d, i),
+            d, i, maxEdits = 1),
           () => pairs(Fuzzy.fuzzyAgainstIndexWith(spark, fuzQueries, t,
             Some(d)).select("doc_id", "dict_term")),
           () => Fuzzy.compactFuzzyIndexGen(spark, t, d, buckets = 2))

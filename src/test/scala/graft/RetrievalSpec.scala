@@ -587,6 +587,26 @@ class RetrievalSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet == before)
     // nothing left to fold: the gate holds shut again
     assert(!Retrieval.compactBm25IfNeeded(spark, table, deltaDir, maxUnfolded = 0))
+    // the gate's own launch shape once the generation has a manifest,
+    // around a fold that does nothing: one manifest job when shut; when
+    // open, that job plus the advance check after the fold (reading the
+    // watermark twice before it made 3)
+    (3 until 6).foreach { i =>
+      Retrieval.applyBm25Delta(
+        Seq((50L + i, s"newterm$i alpha pad pad pad pad")).toDF("doc_id", "text"),
+        deltaDir, i.toLong)
+    }
+    def gateJobs(maxUnfolded: Int): (Boolean, Int) = {
+      val sc = spark.sparkContext
+      val group = s"bm25-gate-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "one compaction gate")
+      val folded = try graft.sources.IndexLifecycle.compactIfNeeded(spark,
+        table, s"$deltaDir/postings", maxUnfolded, buckets = 4, _ => ())
+      finally sc.clearJobGroup()
+      (folded, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    assert(gateJobs(maxUnfolded = 5) == ((false, 1)))
+    assert(gateJobs(maxUnfolded = 2) == ((false, 2)))
   }
 
   test("self-compacting bm25 loop: folds mid-stream at the pressure threshold") {
