@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Sketches, TimeSeries}
@@ -32,31 +32,18 @@ import graft.operators.Stats
   */
 object BehaviorScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val events = Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
 
-    def scaled(times: Int): DataFrame =
-      (0 until times).map { c =>
-        events.select(
-          (col("event_id") + lit(c.toLong * 1000000000L)).as("event_id"),
-          col("ts"),
-          (col("user_id") + lit(c.toLong * 10000000L)).as("user_id"),
-          col("event_type"), col("value"))
-      }.reduce(_ unionByName _)
+    val scaled = Harness.shiftedCopies(events, "event_id" -> 1000000000L,
+      "user_id" -> Harness.IdStride)()
 
-    def median3(mk: => DataFrame): Double = ProbeUtil.median3(mk)
-    def r2(x: Double): Double = ProbeUtil.r2(x)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
+    def r2(x: Double): Double = Harness.r2(x)
 
     // one wiring per operator, shared by both modes — the skew subset
     // must measure exactly the code the growth suite measures

@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench harness (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
-  * A small warmup runs first (tiny scale factor) so per-query timings
+  * A small warmup runs first (Harness.warm, sf0.001) so per-query timings
   * measure steady-state engine throughput rather than JVM/class-loading/
-  * codegen warmup — otherwise whichever query runs first absorbs several
-  * seconds of one-time cost.
+  * codegen warmup. `graft.Bench <names>` times only the named queries
+  * (warming them too) — the diagnostics loop for stage-count work: the
+  * sidecar carries each query's job and stage counts.
   *
   * SELF-ATTRIBUTING: every `slow` entry carries
   * `[wall_ds, stage_exec_ds, gc_ds, n_jobs, job_wall_ds]` from the
-  * median-wall run (a SparkListener sums task executorRunTime / jvmGCTime
+  * median-wall run (Harness's listener sums task executorRunTime / jvmGCTime
   * over completed stages, counts job submissions, and accumulates
   * inside-job wall time between per-run snapshots). Three consecutive
   * rounds burned their top adjudication item bisecting driver-window
@@ -26,147 +25,62 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Cumulative task/job counters; per-run deltas attribute each query. */
-  private final class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val execMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val jobWallMs = new java.util.concurrent.atomic.AtomicLong
-    private val jobStart = new java.util.concurrent.ConcurrentHashMap[
-      Integer, java.lang.Long]
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        execMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        ()
-      }
-    }
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet()
-      jobStart.put(e.jobId, e.time)
-      ()
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val s = jobStart.remove(e.jobId)
-      // summed per job from the events' own timestamps; the bench runs
-      // queries serially so overlap (which would double-count) is rare
-      // and the value is an attribution signal, not an invariant
-      if (s != null) { jobWallMs.addAndGet(e.time - s); () }
-    }
-    def snapshot: (Long, Long, Long, Long) =
-      (execMs.get, gcMs.get, jobs.get, jobWallMs.get)
-  }
-
-  /** Flush the async listener bus so a snapshot sees every event of the
-    * run that just finished. `listenerBus`/`waitUntilEmpty` are
-    * private[spark] in source but public in bytecode — reflection keeps
-    * this harness on the unmanaged-jar classpath without forking a
-    * package. Best-effort: telemetry beats nothing, a timeout must not
-    * fail the bench.
+  /** Warmed before every run: ann_recall warms the whole kernel/codegen
+    * surface of the 8-method harness (without it the first in-suite run
+    * pays the JIT spike, observed 77 ds vs 38-43 steady in the r12
+    * sessions); ext_retrieval_eval the BM25 + phrase + metric codegen;
+    * ext_ts_neighbors the SAX/vector kernels; ext_fuzzy_incremental the
+    * generation-swap lifecycle (bucketed writes, view swaps, delta reads)
+    * plus levenshtein codegen.
     */
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      ()
-    } catch { case _: Throwable => () }
+  private val WarmQueries = Seq("a3_event_counts", "q1_pricing",
+    "ext_fingerprint", "ann_brute_topk", "ext_frame_sample",
+    "ext_dedup_minhash", "ann_recall", "ext_retrieval_eval",
+    "ext_ts_neighbors", "ext_fuzzy_incremental")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); session-wide (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     // ERROR, not WARN: the driver keeps only the LAST 2000 chars of output,
     // and per-query cleanup (unpersisting localCheckpoint blocks) emits a
     // WARN per block — the r9 capture shows that noise sharing the tail
     // window with the JSON line. Nothing may print after the line.
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    // a subset run also warms the queries it names
+    Harness.warm(spark, WarmQueries ++ args)
 
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      // ann_recall warms the whole kernel/codegen surface of the 8-method
-      // harness — without it the first in-suite run pays the JIT spike
-      // (observed 77 ds vs 38-43 steady in the r12 sessions)
-      // ext_retrieval_eval warms the whole BM25 + phrase + metric codegen
-      // surface; ext_ts_neighbors the SAX/vector kernels
-      // ext_fuzzy_incremental warms the generation-swap lifecycle surface
-      // (bucketed writes, view swaps, delta reads) plus levenshtein codegen
-      Seq("a3_event_counts", "q1_pricing", "ext_fingerprint", "ann_brute_topk",
-        "ext_frame_sample", "ext_dedup_minhash", "ann_recall",
-        "ext_retrieval_eval", "ext_ts_neighbors",
-        "ext_fuzzy_incremental").foreach { n =>
-        SparkEntry.queries.get(n).foreach { f =>
-          try f(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-      }
-    }
-
-    // noop sink, not count(): count() lets Catalyst prune projection-only
-    // work, so narrow queries would be timed as bare scans
     val unknown = args.filterNot(SparkEntry.queries.keySet)
     if (unknown.nonEmpty)
       System.err.println(s"BENCH UNKNOWN QUERY NAMES: ${unknown.mkString(", ")}")
     val selected =
       if (args.nonEmpty) SparkEntry.queries.filter(kv => args.contains(kv._1))
       else SparkEntry.queries
-    // median of 3 runs per query: a single run cannot distinguish a real
-    // regression from scheduling/GC noise on sub-2s queries (round-6 showed
-    // 3x swings on untouched operators). A failed first run skips the
-    // retries — failures are deterministic and retrying them pays the cost
-    // three times for the same -1.
+    // median of 3 runs per query (Harness.median3's protocol, looped here
+    // for two Bench-only rules). A failed run skips the retries: failures
+    // are deterministic and retrying them pays the cost three times for
+    // the same -1. After each run, per-query persists AND localCheckpoint
+    // blocks are released: clearCache only covers CacheManager entries,
+    // while checkpoint blocks (e.g. the dedup fixpoint's final round) are
+    // raw RDD persists that would otherwise accumulate across queries.
     val Runs = 3
-    // per-run tuple: the run with the MEDIAN wall supplies the telemetry
-    // so the reported exec/gc/jobs are the ones that produced the
-    // reported wall, not a cross-run blend
-    case class Run(wall: Double, execMs: Long, gcMs: Long, jobs: Long,
-                   jobWallMs: Long)
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = scala.collection.mutable.ArrayBuffer[Run]()
+      val runs = scala.collection.mutable.ArrayBuffer[Harness.Run]()
       var ok = true
-      var r = 0
-      while (ok && r < Runs) {
-        drainListenerBus(spark)
-        val (e0, g0, j0, w0) = metrics.snapshot
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+      while (ok && runs.size < Runs) {
+        try runs += Harness.timed(spark)(fn(spark, sfDir))
         catch {
           case t: Throwable =>
             System.err.println(s"BENCH FAILURE $name: ${t.getClass.getName}: ${t.getMessage}")
             ok = false
         }
         finally {
-          // release per-query persists AND any localCheckpoint blocks —
-          // clearCache only covers CacheManager entries, while checkpoint
-          // blocks (e.g. the dedup fixpoint's final round) are raw RDD
-          // persists that would otherwise accumulate across queries
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark)
-        val (e1, g1, j1, w1) = metrics.snapshot
-        runs += Run(wall, e1 - e0, g1 - g0, j1 - j0, w1 - w0)
-        r += 1
       }
-      val median = if (ok) runs.sortBy(_.wall).apply(Runs / 2)
-        else Run(-1.0, 0, 0, 0, 0)
-      (name, median, ok)
+      (name, if (ok) Harness.median(runs.toSeq) else Harness.Run(-1.0, 0, 0, 0, 0, 0), ok)
     }
     // failed queries report -1 and are excluded from the total, so a broken
     // query can never be mistaken for a fast one.
@@ -240,21 +154,24 @@ object Bench {
     // only 2,000 chars, which forced per-query times into the positional
     // `qds` array and left PERF comparisons joining noisy totals. The SAME
     // timed results are therefore also written as a NAMED map with full
-    // telemetry to bench_perquery.json (cwd, overridable via
-    // SPARK_GRAFT_PERQUERY_OUT). The stdout line below is byte-for-byte
-    // the same contract as before; the file is best-effort and can never
-    // fail the bench.
+    // telemetry, plus each median run's completed-stage count (the
+    // launch-count signal: each stage pays a scheduler round-trip that
+    // host contention multiplies), to bench_perquery_c<cpus>.json (cwd,
+    // named by core count so a c8 run never overwrites a c32 record;
+    // SPARK_GRAFT_PERQUERY_OUT overrides the path). The stdout line below
+    // is byte-for-byte the same contract as before; the file is
+    // best-effort and can never fail the bench.
     try {
       val pq = results.sortBy(_._1).map { case (k, v, ok) =>
         val vals = if (ok)
-          s"[${num(v.wall)},${v.execMs / 100},${v.gcMs / 100},${v.jobs},${v.jobWallMs / 100}]"
-        else "[-1,0,0,0,0]"
+          s"[${num(v.wall)},${v.execMs / 100},${v.gcMs / 100},${v.jobs},${v.jobWallMs / 100},${v.stages}]"
+        else "[-1,0,0,0,0,0]"
         "\"" + k + "\":" + vals
       }.mkString("{", ",", "}")
-      val out = sys.env.getOrElse("SPARK_GRAFT_PERQUERY_OUT", "bench_perquery.json")
+      val out = sys.env.getOrElse("SPARK_GRAFT_PERQUERY_OUT", s"bench_perquery_c$cpus.json")
       val w = new java.io.PrintWriter(out, "UTF-8")
       try w.println(
-        f"""{"total":$total%.2f,"unit":"sec","qunit":"ds","cpus":"$cpus","sf":"$sfName","cols":["wall_ds","stage_exec_ds","gc_ds","n_jobs","job_wall_ds"],"queries":$pq}""")
+        f"""{"total":$total%.2f,"unit":"sec","qunit":"ds","cpus":"$cpus","sf":"$sfName","cols":["wall_ds","stage_exec_ds","gc_ds","n_jobs","job_wall_ds","n_stages"],"queries":$pq}""")
       finally w.close()
     } catch { case _: Throwable => () }
     var keep = slowEntries

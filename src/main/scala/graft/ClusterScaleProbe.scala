@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -31,15 +31,8 @@ import graft.ext.Similarity
   */
 object ClusterScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
@@ -48,15 +41,11 @@ object ClusterScaleProbe {
     // dim-rotated copies (the shared ScaleProbe construction): each
     // copy's centroid affinity differs, so the cluster distribution stays
     // realistic instead of replicating the base corpus k times
-    def scaledEmb(times: Int): DataFrame = ProbeUtil.rotatedCopies(emb, times)
-    def scaledDocs(times: Int): DataFrame =
-      (0 until times).map { c =>
-        docs.select((col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
+    val scaledEmb = Harness.rotatedCopies(emb)
+    val scaledDocs = Harness.shiftedCopies(docs, "doc_id" -> Harness.IdStride)()
 
-    def median3(mk: => DataFrame): Double = ProbeUtil.median3(mk)
-    def r2(x: Double): Double = ProbeUtil.r2(x)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
+    def r2(x: Double): Double = Harness.r2(x)
 
     def clusterHist(e: DataFrame, k: Int): (Long, Long) = {
       val h = Similarity.assignToCentroids(e, k, 1)
@@ -68,8 +57,8 @@ object ClusterScaleProbe {
     }
 
     // warmup: codegen + kernel registration off the measured path
-    Similarity.semDedup(emb, 0.95).write.format("noop").mode("overwrite").save()
-    Similarity.clusterLabels(emb, docs).write.format("noop").mode("overwrite").save()
+    Harness.noop(Similarity.semDedup(emb, 0.95))
+    Harness.noop(Similarity.clusterLabels(emb, docs))
 
     if (sys.env.get("SPARK_GRAFT_MODE").contains("skew")) {
       val hots = sys.env.getOrElse("SPARK_GRAFT_SKEW", "8192")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off diagnostics: wall per phase of the ext_fuzzy_incremental
@@ -9,20 +8,12 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyPhaseProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$tag%-10s ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val (r, run) = Harness.measured(spark)(body)
+      println(f"$tag%-10s ${run.wall}%.2f s")
       r
     }
     if (args.contains("inc2")) {

@@ -46,13 +46,9 @@ object FuzzyScaleProbe {
         levenshtein(col("q_term"), col("dict_term")).cast("long").as("dist"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
+    def r2(x: Double): Double = Harness.r2(x)
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_MODE=lsm — the split base+delta probe ladder (the
@@ -95,16 +91,16 @@ object FuzzyScaleProbe {
           .filter(col("doc_id") >= 900000000L && col("doc_id") < 950000000L)
           .count()
         require(deltaHits > 0, s"delta answered nothing at s=$s")
-        ProbeUtil.median3(Fuzzy.fuzzyAgainstIndexWith(spark, q, name)) // warm
-        ProbeUtil.median3(Fuzzy.fuzzyAgainstIndexWith(spark, q, name, Some(dd)))
-        val tb = ProbeUtil.median3(
+        median3(Fuzzy.fuzzyAgainstIndexWith(spark, q, name)) // warm
+        median3(Fuzzy.fuzzyAgainstIndexWith(spark, q, name, Some(dd)))
+        val tb = median3(
           Fuzzy.fuzzyAgainstIndexWith(spark, q, name))
-        val tw = ProbeUtil.median3(
+        val tw = median3(
           Fuzzy.fuzzyAgainstIndexWith(spark, q, name, Some(dd)))
         println(s"""{"probe":"lsm_fuzzy","scale":$s,"dict_docs":${2000 * s},""" +
-          s""""delta_hits":$deltaHits,"base_s":${ProbeUtil.r2(tb)},""" +
-          s""""with_delta_s":${ProbeUtil.r2(tw)},""" +
-          s""""delta_overhead_s":${ProbeUtil.r2(tw - tb)}}""")
+          s""""delta_hits":$deltaHits,"base_s":${r2(tb)},""" +
+          s""""with_delta_s":${r2(tw)},""" +
+          s""""delta_overhead_s":${r2(tw - tb)}}""")
       }
       spark.stop()
       return
@@ -142,12 +138,12 @@ object FuzzyScaleProbe {
         val want = brute2(q, d)
           .select("doc_id", "dict_term").distinct().count()
         require(got == want, s"blocked=$got brute=$want at s=$s")
-        val tBlocked = ProbeUtil.median3(Fuzzy.fuzzyMatch2(q, d))
-        val tBrute = ProbeUtil.median3(brute2(q, d))
+        val tBlocked = median3(Fuzzy.fuzzyMatch2(q, d))
+        val tBrute = median3(brute2(q, d))
         println(s"""{"probe":"fuzzy_d2","scale":$s,"dict":${10000 * s},""" +
           s""""queries":${100 * s},"matches":$got,""" +
           s""""keys_d1":${keys._1},"keys_d2":${keys._2},""" +
-          s""""blocked_s":${ProbeUtil.r2(tBlocked)},"brute_s":${ProbeUtil.r2(tBrute)}}""")
+          s""""blocked_s":${r2(tBlocked)},"brute_s":${r2(tBrute)}}""")
       }
       spark.stop()
       return
@@ -163,11 +159,11 @@ object FuzzyScaleProbe {
       val want = brute(q, d)
         .select("doc_id", "dict_term").distinct().count()
       require(got == want, s"blocked=$got brute=$want at s=$s")
-      val tBlocked = ProbeUtil.median3(Fuzzy.fuzzyMatch(q, d))
-      val tBrute = ProbeUtil.median3(brute(q, d))
+      val tBlocked = median3(Fuzzy.fuzzyMatch(q, d))
+      val tBrute = median3(brute(q, d))
       println(s"""{"probe":"fuzzy","scale":$s,"dict":${10000 * s},""" +
         s""""queries":${100 * s},"matches":$got,""" +
-        s""""blocked_s":${ProbeUtil.r2(tBlocked)},"brute_s":${ProbeUtil.r2(tBrute)}}""")
+        s""""blocked_s":${r2(tBlocked)},"brute_s":${r2(tBrute)}}""")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput probe for the streaming ingest gates (SCALE.md): per-batch
@@ -19,15 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object GateProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -46,14 +38,9 @@ object GateProbe {
     // per batch: wall and the Spark jobs the body launched (its job group)
     def loop(tag: String)(body: (org.apache.spark.sql.DataFrame, Long) => Unit)
         : Unit = {
-      val sc = spark.sparkContext
       val (walls, jobs) = (0 until Batches).map { i =>
-        val group = s"gate-probe-$tag-$i"
-        sc.setJobGroup(group, tag)
-        val t0 = System.nanoTime()
-        try body(batch(i), i.toLong) finally sc.clearJobGroup()
-        ((System.nanoTime() - t0) / 1e9,
-          sc.statusTracker.getJobIdsForGroup(group).length)
+        Harness.jobsIn(spark)(
+          Harness.measured(spark)(body(batch(i), i.toLong))._2.wall)
       }.unzip
       val w = walls.map(x => f"$x%.2f").mkString(" ")
       val rate = Batches / walls.sum
@@ -106,22 +93,18 @@ object GateProbe {
     // per SF dir, median-of-3 wall. Walls should move far less than the
     // 10× data steps — the four-actions-regardless-of-size design
     if (args.contains("pipeline")) {
-      Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-          "/root/testdata/sf0.1").foreach { dir =>
-        val raw = try Tables.documents(spark, dir)
+      Seq("sf0.001", "sf0.01", "sf0.1").foreach { sf =>
+        val raw = try Tables.documents(spark, s"${Harness.DataRoot}/$sf")
           catch { case _: Throwable => null }
         if (raw != null) {
           val c = ext.Curation.withCrawlCorpus(raw)
           val bench = ext.Dedup.spanTable(raw.filter(col("doc_id") % 97 === 0))
           val nDocs = c.count()
-          val walls = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
+          val walls = Seq.fill(3)(Harness.timed(spark)(
             ext.Curation.crawlPipeline(c,
               Seq("ads.example.net", "site7.example.org").toDF("domain"),
-              bench).count()
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          println(f"pipeline ${dir.split('/').last}%-8s docs=$nDocs%-7d " +
+              bench)).wall).sorted
+          println(f"pipeline $sf%-8s docs=$nDocs%-7d " +
             f"median=${walls(1)}%.2f s  walls=[${walls.map(x => f"$x%.2f").mkString(" ")}]")
         }
       }

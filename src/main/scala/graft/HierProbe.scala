@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.ext.Similarity
 
@@ -15,39 +14,17 @@ import graft.ext.Similarity
   */
 object HierProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def scaled(times: Int): DataFrame =
-      (0 until times).map { c =>
-        val r = c % 64
-        base.select(
-          (col("vec_id") + lit(c.toLong * 10000000L)).as("vec_id"),
-          expr(s"concat(slice(embedding, ${r + 1}, ${64 - r}), slice(embedding, 1, $r))")
-            .as("embedding"))
-      }.reduce(_ unionByName _)
-
-    def median3(mk: => DataFrame): Double = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
-    }
+    val scaled = Harness.rotatedCopies(base)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
 
     // warmup: compile both plan families once
-    Similarity.ivfTopNeighbor(base, 16).write.format("noop").mode("overwrite").save()
-    Similarity.ivfTopNeighborHier(base, 4, 16).write.format("noop").mode("overwrite").save()
+    Harness.noop(Similarity.ivfTopNeighbor(base, 16))
+    Harness.noop(Similarity.ivfTopNeighborHier(base, 4, 16))
 
     // codebook grows as ~sqrt(N) with the corpus (the SIZING rule); k1 ~ sqrt(k2).
     // vec_id < k2 picks centroids only from copy 0, which holds every base id —

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Retrieval}
@@ -17,24 +17,13 @@ import graft.ext.{Dedup, Retrieval}
   */
 object LsmProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    def scaledDocs(times: Int): DataFrame =
-      (0 until times).map { c =>
-        docs.select((col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
+    val scaledDocs = Harness.shiftedCopies(docs, "doc_id" -> Harness.IdStride)()
     // constant delta: 50 docs with SYNTHESIZED vocabulary (unique tokens,
     // absent from every base copy) — base-text twins would be dropped by
     // the LSH dedup loop as duplicates and leave the delta EMPTY, turning
@@ -49,7 +38,8 @@ object LsmProbe {
       .select((col("doc_id") + 950000000L).as("doc_id"), col("text"))
       .localCheckpoint(true)
 
-    def r2(x: Double) = ProbeUtil.r2(x)
+    def r2(x: Double) = Harness.r2(x)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
     val tmp = java.nio.file.Files.createTempDirectory("lsmprobe").toString
 
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,4,16")
@@ -65,12 +55,10 @@ object LsmProbe {
       val bmDeltaRows = spark.read.parquet(s"$bd/postings").count()
       // warmup BOTH shapes once (the with-delta plan has its own codegen),
       // then median-of-3
-      Retrieval.searchBm25Index(spark, bt, queries)
-        .write.format("noop").mode("overwrite").save()
-      Retrieval.searchBm25IndexWith(spark, bt, bd, queries)
-        .write.format("noop").mode("overwrite").save()
-      val tb = ProbeUtil.median3(Retrieval.searchBm25Index(spark, bt, queries))
-      val tw = ProbeUtil.median3(
+      Harness.noop(Retrieval.searchBm25Index(spark, bt, queries))
+      Harness.noop(Retrieval.searchBm25IndexWith(spark, bt, bd, queries))
+      val tb = median3(Retrieval.searchBm25Index(spark, bt, queries))
+      val tw = median3(
         Retrieval.searchBm25IndexWith(spark, bt, bd, queries))
       println(s"""{"probe":"lsm_bm25","scale":$times,"n":$n,""" +
         s""""delta_rows":$bmDeltaRows,"base_s":${r2(tb)},""" +
@@ -85,12 +73,10 @@ object LsmProbe {
       // overhead (the with-delta plan degenerates to base-only)
       val lshDeltaRows = spark.read.parquet(s"$ld/bands").count()
       require(lshDeltaRows > 0, "LSH delta is empty — measurement vacuous")
-      Dedup.dedupAgainstIndex(spark, probeDocs, lt)
-        .write.format("noop").mode("overwrite").save()
-      Dedup.dedupAgainstIndexWith(spark, probeDocs, lt, ld)
-        .write.format("noop").mode("overwrite").save()
-      val lb = ProbeUtil.median3(Dedup.dedupAgainstIndex(spark, probeDocs, lt))
-      val lw = ProbeUtil.median3(
+      Harness.noop(Dedup.dedupAgainstIndex(spark, probeDocs, lt))
+      Harness.noop(Dedup.dedupAgainstIndexWith(spark, probeDocs, lt, ld))
+      val lb = median3(Dedup.dedupAgainstIndex(spark, probeDocs, lt))
+      val lw = median3(
         Dedup.dedupAgainstIndexWith(spark, probeDocs, lt, ld))
       println(s"""{"probe":"lsm_lsh","scale":$times,"n":$n,""" +
         s""""delta_rows":$lshDeltaRows,"base_s":${r2(lb)},""" +
@@ -124,12 +110,10 @@ object LsmProbe {
       Dedup.appendJaccardDelta(spark, deltaDocs, jt, jd, 0L, 850000L)
       val vocabDeltaRows = spark.read.parquet(s"$jd/vocab").count()
       require(vocabDeltaRows > 0, "jaccard vocab delta empty — vacuous")
-      Dedup.jaccardAgainstIndex(spark, jacProbe, jt)
-        .write.format("noop").mode("overwrite").save()
-      Dedup.jaccardAgainstIndexWith(spark, jacProbe, jt, jd)
-        .write.format("noop").mode("overwrite").save()
-      val jb = ProbeUtil.median3(Dedup.jaccardAgainstIndex(spark, jacProbe, jt))
-      val jw = ProbeUtil.median3(
+      Harness.noop(Dedup.jaccardAgainstIndex(spark, jacProbe, jt))
+      Harness.noop(Dedup.jaccardAgainstIndexWith(spark, jacProbe, jt, jd))
+      val jb = median3(Dedup.jaccardAgainstIndex(spark, jacProbe, jt))
+      val jw = median3(
         Dedup.jaccardAgainstIndexWith(spark, jacProbe, jt, jd))
       println(s"""{"probe":"lsm_jaccard_vocab","scale":$times,""" +
         s""""vocab":${20000 * times},"delta_vocab_rows":$vocabDeltaRows,""" +

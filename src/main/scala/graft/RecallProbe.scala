@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.StageInfo
 
 /** Diagnostics main for the recall harness (the suite's most expensive
   * query): times each ANN branch standalone, then runs `ann_recall`
-  * end-to-end with a stage listener and prints per-rep wall, job/stage
+  * end-to-end under Harness's listener and prints per-rep wall, job/stage
   * counts, stage-exec sums, and the slowest stages. The [[ScaleProbe]]
   * companion for ANN perf work — run it before and after touching
   * anything under `ext/Similarity.scala`:
@@ -15,49 +15,18 @@ import org.apache.spark.sql.SparkSession
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
-    var runStart = 0L
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val dur = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(-1L)
-        val m = i.taskMetrics
-        val desc = s"run=${m.executorRunTime}ms cpu=${m.executorCpuTime / 1000000}ms " +
-          s"deser=${m.executorDeserializeTime}ms result=${m.resultSerializationTime}ms " +
-          s"tasks=${i.numTasks} rdd=${i.rddInfos.map(_.name).mkString("|").take(80)}"
-        stageLog.add((desc, dur, i.submissionTime.map(_ - runStart).getOrElse(-1L))); ()
-      }
-    })
 
     val fn = SparkEntry.queries("ann_recall")
     // warmup (trains + caches artifacts, JIT)
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    Harness.noop(fn(spark, sfDir))
 
     val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
       .localCheckpoint(true)
-    def t(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"branch $label: median ${ts.sorted.apply(1)}%.2f s")
-    }
+    def t(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit =
+      println(f"branch $label: median ${Harness.median3(spark)(mk).wall}%.2f s")
     t("brute_truth")(ext.Similarity.bruteForceTopK(emb, 100, 1))
     t("sq8_100")(ext.Similarity.sq8TopK(emb, 100, 1))
     t("sq8_20")(ext.Similarity.sq8TopK(emb, 20, 1))
@@ -68,21 +37,24 @@ object RecallProbe {
     println("=== pqAdcTopK(100,1) formatted plan ===")
     println(ext.Similarity.pqAdcTopK(emb, 100, 1).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode).take(6000))
+    def dur(i: StageInfo): Long =
+      (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(-1L)
     (1 to 3).foreach { r =>
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      jobs.set(0); stageLog.clear()
-      runStart = System.currentTimeMillis()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      import scala.jdk.CollectionConverters._
-      val sl = stageLog.asScala.toSeq
-      val sumDur = sl.map(_._2).sum
-      println(f"rep$r: $sec%.2f s, jobs=${jobs.get}, stages=${sl.size}, stage-exec sum=${sumDur}ms")
+      val runStart = System.currentTimeMillis()
+      val run = Harness.timed(spark)(fn(spark, sfDir))
+      val sl = Harness.metrics(spark).lastStages(run.stages.toInt)
+      println(f"rep$r: ${run.wall}%.2f s, jobs=${run.jobs}, stages=${run.stages}, " +
+        f"stage-exec sum=${sl.map(dur).sum}ms")
       if (r == 3)
-        sl.sortBy(-_._2).take(12).foreach { case (n, d, g) =>
-          println(f"  stage dur=${d}ms submit@${g}ms  $n")
+        sl.sortBy(-dur(_)).take(12).foreach { i =>
+          val m = i.taskMetrics
+          println(f"  stage dur=${dur(i)}ms " +
+            f"submit@${i.submissionTime.map(_ - runStart).getOrElse(-1L)}ms  " +
+            s"run=${m.executorRunTime}ms cpu=${m.executorCpuTime / 1000000}ms " +
+            s"deser=${m.executorDeserializeTime}ms result=${m.resultSerializationTime}ms " +
+            s"tasks=${i.numTasks} rdd=${i.rddInfos.map(_.name).mkString("|").take(80)}")
         }
     }
     spark.stop()

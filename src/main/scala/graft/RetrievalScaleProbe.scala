@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Retrieval
@@ -20,33 +20,17 @@ import graft.ext.Retrieval
   */
 object RetrievalScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-    def scaled(times: Int): DataFrame =
-      (0 until times).map { c =>
-        base.select(
-          (col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1c$c").as("text"))
-      }.reduce(_ unionByName _)
-
-    def median3(mk: => DataFrame): Double = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
+    val scaled = Harness.shiftedCopies(base, "doc_id" -> Harness.IdStride) {
+      (c, df) => df.withColumn("text", regexp_replace(col("text"), "(\\S+)", s"$$1c$c"))
     }
-    def r2(x: Double): Double = math.round(x * 100) / 100.0
+
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
+    def r2(x: Double): Double = Harness.r2(x)
 
     // SKEW mode — the Zipf-head case the df ceiling exists for: every doc
     // (and therefore every query) carries a corpus-wide stopword, so the
@@ -78,8 +62,7 @@ object RetrievalScaleProbe {
         val bm = median3(Retrieval.bm25TopK(corpus))
         val ph = median3(Retrieval.phraseSearchTopDocs(corpus))
         println(s"""{"probe":"retrieval","scale":$times,"docs":$n,""" +
-          s""""bm25_s":${math.round(bm * 100) / 100.0},""" +
-          s""""phrase_s":${math.round(ph * 100) / 100.0}}""")
+          s""""bm25_s":${r2(bm)},"phrase_s":${r2(ph)}}""")
       } finally corpus.unpersist()
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -17,23 +17,16 @@ import graft.ext.Similarity
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def scaled(times: Int): DataFrame = ProbeUtil.rotatedCopies(base, times)
-    def median3(mk: => DataFrame): Double = ProbeUtil.median3(mk)
+    val scaled = Harness.rotatedCopies(base)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
 
     // JVM/codegen warmup so the first measured tier isn't inflated
-    Similarity.lshTopNeighbor(base).write.format("noop").mode("overwrite").save()
+    Harness.noop(Similarity.lshTopNeighbor(base))
 
     Seq(1, 10, 100).foreach { times =>
       val emb = scaled(times).localCheckpoint(true)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Curation, Dedup, Fuzzy, Retrieval}
@@ -21,30 +21,20 @@ import graft.operators.Stats
   */
 object ScalingRungProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import Harness.noop
     def median3(tag: String, scale: Int)(mk: => DataFrame): Unit = {
-      // no persistent-RDD sweep between reps: the tier's scaled input is a
-      // localCheckpoint whose blocks must survive all three reps
-      val walls = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        noop(mk)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"""{"probe":"$tag","scale":$scale,"cpus":$cpus,"wall_med":${walls(1)}%.2f,"walls":[${walls.map(w => f"$w%.2f").mkString(",")}]}""")
+      // clearCache before each rep, but no persistent-RDD sweep: the
+      // tier's scaled input is a localCheckpoint whose blocks must survive
+      // all three reps
+      val runs = Seq.fill(3) { spark.catalog.clearCache(); Harness.timed(spark)(mk) }
+      val walls = runs.map(_.wall).sorted
+      println(f"""{"probe":"$tag","scale":$scale,"cpus":$cpus,"wall_med":${Harness.median(runs).wall}%.2f,"walls":[${walls.map(w => f"$w%.2f").mkString(",")}]}""")
     }
 
     // 10x documents: copy i shifts doc_id by i*100_000 (stays < 1e6 so the
@@ -52,33 +42,16 @@ object ScalingRungProbe {
     // vowels so each copy contributes fresh vocabulary / span families.
     val rot = Seq("aeiou", "eioua", "iouae", "ouaei", "uaeio",
       "bcdfg", "cdfgb", "dfgbc", "fgbcd", "gbcdf")
-    def docsScaled(times: Int): DataFrame = {
-      val base = Tables.documents(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism)
-      val maxId = base.agg(max("doc_id")).head().getLong(0)
-      require(maxId < 100000L, s"docsScaled: max doc_id $maxId is not " +
-        "below the 100,000 copy stride — shifted copies would collide")
-      (0 until times).map { i =>
-        if (i == 0) base
-        else base
-          .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000L))
-          .withColumn("text",
-            translate(col("text"), "aeiou", rot(i % rot.length)))
-      }.reduce(_ unionByName _)
+    // (rot(0) is the identity: copy 0 is the base corpus)
+    lazy val docsScaled = Harness.shiftedCopies(Tables.documents(spark, sfDir)
+      .repartition(spark.sparkContext.defaultParallelism), "doc_id" -> 100000L) {
+      (i, df) => df.withColumn("text",
+        translate(col("text"), "aeiou", rot(i % rot.length)))
     }
     // 10x events: copy i shifts user_id and event_id; ts unchanged.
-    def eventsScaled(times: Int): DataFrame = {
-      val base = Tables.events(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism)
-      (0 until times).map { i =>
-        if (i == 0) base
-        else base.select(
-          (col("event_id") + lit(i.toLong * 10000000L)).as("event_id"),
-          col("ts"),
-          (col("user_id") + lit(i.toLong * 100000L)).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionByName _)
-    }
+    lazy val eventsScaled = Harness.shiftedCopies(Tables.events(spark, sfDir)
+      .repartition(spark.sparkContext.defaultParallelism),
+      "event_id" -> Harness.IdStride, "user_id" -> 100000L)()
 
     val tiers = Seq(1, 10)
     val which =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Curation, TextAnalysis}
@@ -18,34 +18,16 @@ import graft.ext.{Curation, TextAnalysis}
   */
 object TextScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source")
-    def scaled(times: Int): DataFrame =
-      (0 until times).map { c =>
-        base.select(
-          (col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          concat(lit(s"c$c "), col("text")).as("text"),
-          col("lang"), col("source"))
-      }.reduce(_ unionByName _)
-
-    def median3(mk: => DataFrame): Double = {
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
+    val scaled = Harness.shiftedCopies(base, "doc_id" -> Harness.IdStride) {
+      (c, df) => df.withColumn("text", concat(lit(s"c$c "), col("text")))
     }
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
 
     // optional section filter: `textops` / `substr` / `skew` as args run
     // only those blocks (a re-measurement never re-pays the others)
@@ -53,8 +35,7 @@ object TextScaleProbe {
     def want(s: String) = only.isEmpty || only.contains(s)
 
     // warmup
-    if (want("textops"))
-      Curation.chunkDocuments(base).write.format("noop").mode("overwrite").save()
+    if (want("textops")) Harness.noop(Curation.chunkDocuments(base))
 
     Seq(1, 10, 100).filter(_ => want("textops")).foreach { times =>
       val docs = scaled(times).localCheckpoint(true)
@@ -81,12 +62,11 @@ object TextScaleProbe {
     // Interleaving a copy-marker token between every token keeps every
     // 8-gram copy-local while the (d, d+1M) perturbed-pair structure
     // replicates per copy: output rows and work both scale linearly.
-    def substrScaled(times: Int): DataFrame =
-      (0 until times).map { c =>
-        graft.ext.Dedup.withPerturbedCopies(base.select(
-          (col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), " ", s" m$c ").as("text")))
-      }.reduce(_ unionByName _)
+    val substrScaled = Harness.shiftedCopies(base.select("doc_id", "text"),
+      "doc_id" -> Harness.IdStride) { (c, df) =>
+      graft.ext.Dedup.withPerturbedCopies(
+        df.withColumn("text", regexp_replace(col("text"), " ", s" m$c ")))
+    }
     // the span table is persisted ONCE per rung and both consumers read
     // the *From variants — the production shape (SparkEntry shares one
     // TrainedStore artifact across the three span queries); per-call

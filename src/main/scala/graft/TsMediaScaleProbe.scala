@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Multimodal, Similarity, TimeSeries}
@@ -21,36 +21,24 @@ import graft.ext.{Multimodal, Similarity, TimeSeries}
   */
 object TsMediaScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Harness.sfDir()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val events = Tables.events(spark, sfDir).select("user_id", "ts")
     val media = Multimodal.asMedia(
       Tables.documents(spark, sfDir).select("doc_id", "text"))
 
-    def scaledEvents(times: Int): DataFrame =
-      (0 until times).map { c =>
-        events.select((col("user_id") + lit(c.toLong * 10000000L)).as("user_id"),
-          col("ts"))
-      }.reduce(_ unionByName _)
+    val scaledEvents = Harness.shiftedCopies(events, "user_id" -> Harness.IdStride)()
     // perturbed payloads: distinct md5s spread the copies over the sign
     // buckets instead of planting exact duplicates
-    def scaledMedia(times: Int): DataFrame =
-      (0 until times).map { c =>
-        media.select((col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          concat(col("payload"), lit(s"#$c").cast("binary")).as("payload"))
-      }.reduce(_ unionByName _)
+    val scaledMedia = Harness.shiftedCopies(media, "doc_id" -> Harness.IdStride) {
+      (c, df) => df.withColumn("payload",
+        concat(col("payload"), lit(s"#$c").cast("binary")))
+    }
 
-    def median3(mk: => DataFrame): Double = ProbeUtil.median3(mk)
-    def r2(x: Double): Double = ProbeUtil.r2(x)
+    def median3(mk: => DataFrame): Double = Harness.median3(spark)(mk).wall
+    def r2(x: Double): Double = Harness.r2(x)
 
     // SKEW mode — the scenario the guard exists for: the population grows
     // by users/docs that all land in ONE bucket (a corpus-wide "inactive"

@@ -87,19 +87,10 @@ object Verify {
     // optional trailing args: dump only these queries (fast local loop);
     // unknown names fail loudly rather than silently verifying nothing
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // micros (not INT96) so the driver's parquet readers see the same
-      // timestamp physical type DuckDB produces for the oracle results
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // legacy events.parquet vintages are TIMESTAMP(NANOS); session-wide
-      // (see Tables.loadEventsRaw — harmless for the micros layout)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // micros (not INT96) so the driver's parquet readers see the same
+    // timestamp physical type DuckDB produces for the oracle results
+    val spark = Harness.session(Harness.cpus,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, only)
     // exit 0 even when queries failed — DELIBERATE: the driver must still

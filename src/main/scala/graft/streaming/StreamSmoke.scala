@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
@@ -16,13 +15,8 @@ import graft.Tables
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = args.headOption.getOrElse(graft.Harness.WarmDir)
+    val spark = graft.Harness.session(4)
     spark.sparkContext.setLogLevel("WARN")
 
     val tmp = java.nio.file.Files.createTempDirectory("stream_smoke").toString

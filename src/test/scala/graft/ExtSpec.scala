@@ -612,15 +612,12 @@ class ExtSpec extends SparkSpec {
     }
     // the launch shape: Spark jobs one fused batch body launches
     def step(b: org.apache.spark.sql.DataFrame, id: Long): Int = {
-      val sc = spark.sparkContext
-      val group = s"crawl-ingest-$id-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, "one crawl ingest batch")
-      try fused(b, id) finally sc.clearJobGroup()
+      val (_, jobs) = Harness.jobsIn(spark)(fused(b, id))
       chained(b, id)
       // autoCompactAt = 1: every batch folds
       sides.foreach(s => Dedup.compactSubstrIfNeeded(spark, idx(s),
         out(s, "delta"), maxUnfolded = 0))
-      sc.statusTracker.getJobIdsForGroup(group).length
+      jobs
     }
     def same(when: String): Unit =
       Seq("flagged", "quar", "surv", "delta/spans").foreach { o =>
@@ -1218,7 +1215,7 @@ class ExtSpec extends SparkSpec {
     // exact 1x population of SCALE.md's measured ladder (8 → 11 → 15 bits
     // at 1x/10x/100x)
     val base = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    def scaled(times: Int) = graft.ProbeUtil.rotatedCopies(base, times)
+    val scaled = Harness.rotatedCopies(base)
     def sumSq(df: org.apache.spark.sql.DataFrame, bits: Int): Long =
       df.groupBy(Similarity.signBucket(col("embedding"), bits).as("bucket"))
         .agg(count(lit(1)).as("c"))
@@ -1294,13 +1291,8 @@ class ExtSpec extends SparkSpec {
       maxBucket = 8)
     Similarity.applyIvfDelta(e.filter(col("vec_id") >= 150), t, deltaDir, 0L)
     try {
-      val sc = spark.sparkContext
-      val group = s"ivf-fold-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, "one ivf generation fold")
-      try Similarity.compactIvfIndexGen(spark, t, deltaDir, 4,
-        maxBucket = Similarity.InheritMaxBucket)
-      finally sc.clearJobGroup()
-      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      val (_, jobs) = Harness.jobsIn(spark)(Similarity.compactIvfIndexGen(
+        spark, t, deltaDir, 4, maxBucket = Similarity.InheritMaxBucket))
       // one single-row manifest job: the inherited cap and the folded
       // watermark come off one read (two reads of the same row launched
       // 10 jobs)

@@ -596,15 +596,9 @@ class RetrievalSpec extends SparkSpec {
         Seq((50L + i, s"newterm$i alpha pad pad pad pad")).toDF("doc_id", "text"),
         deltaDir, i.toLong)
     }
-    def gateJobs(maxUnfolded: Int): (Boolean, Int) = {
-      val sc = spark.sparkContext
-      val group = s"bm25-gate-${java.util.UUID.randomUUID}"
-      sc.setJobGroup(group, "one compaction gate")
-      val folded = try graft.sources.IndexLifecycle.compactIfNeeded(spark,
-        table, s"$deltaDir/postings", maxUnfolded, buckets = 4, _ => ())
-      finally sc.clearJobGroup()
-      (folded, sc.statusTracker.getJobIdsForGroup(group).length)
-    }
+    def gateJobs(maxUnfolded: Int): (Boolean, Int) =
+      Harness.jobsIn(spark)(graft.sources.IndexLifecycle.compactIfNeeded(spark,
+        table, s"$deltaDir/postings", maxUnfolded, buckets = 4, _ => ()))
     assert(gateJobs(maxUnfolded = 5) == ((false, 1)))
     assert(gateJobs(maxUnfolded = 2) == ((false, 2)))
   }

@@ -33,20 +33,13 @@ object TestSpark {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
+    val s = Harness.session(4, "spark.app.name" -> "graft-test",
       // bucketed-table tests need a catalog; keep the warehouse out of the repo
-      .config("spark.sql.warehouse.dir", managedTempDir("graft-warehouse"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.warehouse.dir" -> managedTempDir("graft-warehouse"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir = Harness.WarmDir
 }
 
 abstract class SparkSpec extends AnyFunSuite {
